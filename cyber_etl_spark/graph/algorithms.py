@@ -4,13 +4,51 @@ GraphFrames isn't available in this environment, and the reference's
 algorithms ran inside Neo4j GDS (gds.articleRank / gds.louvain, writeup
 pp.4-5, SURVEY.md §2.11 Q6/Q7).  Each algorithm here is a loop of
 join + hash-aggregation steps over (src, dst) edge DataFrames — the same
-dataflow a Pregel superstep compiles to — with per-iteration
-``localCheckpoint`` to truncate the lineage (otherwise the plan doubles
-every superstep and the driver OOMs planning, not computing).
+dataflow a Pregel superstep compiles to (Pregelix: a superstep is a join
+of vertex state with messages followed by a group-by).
+
+Superstep driver.  Every loop is a step function plus (optionally) a stop
+test, run by :class:`_Supersteps`, which alone makes the physical-plan
+choices — the join strategy is not part of the algorithm:
+
+- **Broadcast or shuffle.**  Each loop states one bound on the rows its
+  per-step state can ever hold (|V|, |S|·|V|, |E|, …).  Under
+  ``_BCAST_MAX_ROWS`` every state-side join is hinted broadcast
+  (``bx``): checkpointed state frames carry no statistics, so they would
+  otherwise plan SortMergeJoins that re-exchange the edge side every
+  superstep, and checkpoint jobs bypass AQE's broadcast conversion.
+  Past the cap the plain shuffle join runs (AQE can still convert it).
+- **Width.**  Under the cap the step's output, and any frame the step
+  passes through ``nw``, is coalesced to ``_width(edge rows)`` tasks —
+  the plan-local replacement for mutating the session-global
+  ``spark.sql.shuffle.partitions``.  ``coalesce`` is narrow: right after
+  a shuffle it merges reduce partitions within the same stage, so shuffle
+  bytes are unchanged and only the scheduling floor drops (32 near-empty
+  reduce tasks per groupBy per superstep was 2x wall on q43 at sf0.1).
+  Past the cap nothing is coalesced, so an aggregate's hash partitioning
+  feeds the next superstep's shuffle join exchange-free.
+- **AQE scope.**  Loops whose steps are only hinted-broadcast joins and
+  aggregations (pagerank, bfs, multi-bfs, ktruss, sssp, hits,
+  eigenvector) run their broadcast path with AQE off (:func:`_aqe_off`);
+  past the cap — the 100 TB regime — AQE stays on for skew handling.
+- **Pinning and convergence.**  Every step's output is pinned with
+  ``localCheckpoint`` — otherwise the plan doubles every superstep and
+  the driver OOMs planning, not computing; and a forced broadcast of an
+  uncheckpointed chain is quadratic (18 jobs / 7.2 s vs 2.9 s for 4 LPA
+  supersteps at sf0.1).  A loop with a stop test pins lazily and the one
+  action that computes the test's measure (a count, or an ``Observation``
+  riding that count) materializes the pin: one job per superstep instead
+  of a pin job plus a count job (r12/r13).  A loop without one pins
+  eagerly; if its step references the state once (``chain``), past the
+  cap it pins only every ``_CHAIN`` steps — a few chained shuffle-join
+  supersteps plan fine and run as one job.  Loops that reference their
+  state several times per step go through :func:`_plan_barrier` instead
+  of the pin every few steps (CC 6, Luby 2).
 
 Determinism:
 - connected_components / label_propagation are integer-valued with min /
-  rank-based tie-breaks → bit-deterministic at any partitioning.
+  rank-based tie-breaks → bit-deterministic at any partitioning, so the
+  join strategy cannot perturb them.
 - pagerank/articlerank sum doubles per node; shuffle order perturbs the
   last ulps only, so results are compared rounded (1e-6).
 
@@ -22,12 +60,13 @@ list and the rank/label state by vertex id so each superstep co-locates,
 
 from __future__ import annotations
 
+import threading
 import weakref
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..operators.quantiles import _local_values_df
 
@@ -46,64 +85,137 @@ _DERIVED: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictiona
 # OOMs real executors long before the driver notices.
 _BCAST_MAX_ROWS = 1_000_000
 
+# Past the cap, loops that reference their state once per step pin every
+# _CHAIN steps (each eager checkpoint of a large vector is a real
+# blocking job).
+_CHAIN = 5
+
+_AQE_KEY = "spark.sql.adaptive.enabled"
+_AQE_LOCK = threading.Lock()
+_AQE_SCOPES: dict = {}  # session -> [open scopes, value to restore]
+
 
 @contextmanager
 def _aqe_off(spark, enabled: bool = True):
-    """Disable adaptive execution for the enclosed LOOP-INTERNAL actions.
+    """Disable adaptive execution for the enclosed loop-internal actions.
 
-    Per-superstep pin jobs in the force-broadcast rank loops are one
-    hinted broadcast join + one aggregation whose width `_nw` already
-    sizes — AQE contributes nothing there but materializes every
-    exchange as an extra scheduler job (r13 A/B, interleaved min-of-3:
-    q28 3.17→2.88 s / 33→22 jobs, q135 3.06→2.36, q29 2.59→2.31,
-    q129 2.77→2.33; jobs −1/superstep each).  Loops with UNHINTED or
-    self-join shuffles (CC, ktruss, luby, betweenness) measured WORSE
-    wall with AQE off — AQE's parallel stage materialization overlaps
-    their independent subtrees — so only the single-shuffle-per-step
-    rank/relaxation loops use this, and only on their broadcast path
-    (past `_BCAST_MAX_ROWS` — the 100 TB regime — AQE stays on for
-    skew handling).  The toggle is scoped to the loop's own blocking
-    actions; frames returned to callers plan under the session default
-    again.  AQE is adaptive EXECUTION, never results — a concurrently
-    planned query on a threaded sweep would at worst run one query
-    non-adaptively.
+    Per-superstep jobs of the hinted-broadcast loops are one broadcast
+    join + one aggregation whose width the driver already sizes — AQE
+    contributes nothing there but materializes every exchange as an extra
+    scheduler job (r13 A/B, interleaved min-of-3: q28 3.17→2.88 s /
+    33→22 jobs, q135 3.06→2.36, q29 2.59→2.31, q129 2.77→2.33; jobs
+    −1/superstep each).  Loops with unhinted or self-join shuffles (CC,
+    luby, betweenness) measured WORSE wall with AQE off — AQE's parallel
+    stage materialization overlaps their independent subtrees.
+
+    The setting is session-wide, and loops run concurrently on one
+    session (the threaded oracle sweep), so scopes are refcounted under
+    a lock: only the outermost entry turns AQE off, and only the last
+    exit restores the value it found.  While any scope is open, a query
+    planned on another thread runs non-adaptively — adaptive EXECUTION,
+    never results.
     """
     if not enabled:
         yield
         return
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    with _AQE_LOCK:
+        scope = _AQE_SCOPES.setdefault(spark, [0, None])
+        if scope[0] == 0:
+            scope[1] = spark.conf.get(_AQE_KEY)
+            spark.conf.set(_AQE_KEY, "false")
+        scope[0] += 1
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        with _AQE_LOCK:
+            scope[0] -= 1
+            if scope[0] == 0:
+                spark.conf.set(_AQE_KEY, scope[1])
+                del _AQE_SCOPES[spark]
 
 
-def _width(rows: int, rows_per_part: int = 200_000) -> int:
-    """Target stage width for loop-internal jobs: ~rows_per_part rows per
-    task with a floor of 8 (same economics as :func:`_compact`)."""
-    return max(8, rows // rows_per_part)
+def _width(rows: int) -> int:
+    """Target stage width: ~200 k rows per task with a floor of 8.  On a
+    big graph the target exceeds the current partition count and a
+    coalesce to it is a no-op, so cluster-scale parallelism is untouched."""
+    return max(8, rows // 200_000)
 
 
-def _nw(df: DataFrame, w: int) -> DataFrame:
-    """Collapse the consuming stage of a loop-internal shuffle to ``w``
-    tasks — the plan-local replacement for mutating the session-global
-    ``spark.sql.shuffle.partitions`` (which leaked the shrunken width to
-    any concurrently planned query on the same session).
+class _Supersteps:
+    """The superstep driver (module docstring): one loop's physical plan,
+    decided once from its state-row bound and edge-row count."""
 
-    ``coalesce`` is narrow: placed right after a shuffle-producing
-    operator (aggregation or shuffle join) it merges that exchange's
-    reduce partitions into ``w`` tasks *within the same stage* — map-side
-    partial aggregation below the exchange is untouched, so shuffle BYTES
-    are identical; only the scheduling floor changes (32 near-empty reduce
-    tasks per groupBy per superstep on a 60 k-edge graph was 2x wall on
-    q43 at sf0.1; checkpoint jobs bypass AQE re-optimization and AQE's
-    ``parallelismFirst`` default keeps tiny shuffles wide anyway).  On a
-    big graph ``w`` exceeds the exchange's partition count and coalesce
-    is a no-op, so cluster-scale parallelism is untouched.
-    """
-    return df.coalesce(w)
+    def __init__(self, spark, rows_bound: int, edge_rows: int):
+        self.spark = spark
+        self.bcast = rows_bound <= _BCAST_MAX_ROWS
+        self.w = _width(edge_rows)
+        self.last = None  # the final stop-test measure of run()
+
+    def bx(self, df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if self.bcast else df
+
+    def nw(self, df: DataFrame) -> DataFrame:
+        return df.coalesce(self.w) if self.bcast else df
+
+    def run(
+        self,
+        state,
+        step,
+        *,
+        iters: int,
+        aqe_off: bool = False,
+        until=None,
+        m0=None,
+        measure=None,
+        history: bool = False,
+        chain: bool = False,
+        barrier_every: int = 0,
+    ):
+        """Run ``step(state, i) -> DataFrame`` up to ``iters`` times.
+
+        ``until(prev, cur)`` is the stop test over the step's measure —
+        the pinned output's row count, or the aggregate Column
+        ``measure`` observed on it; ``prev`` starts at ``m0``.  With
+        ``history`` the state is the list of every pinned output, oldest
+        first (seeded by the caller), for loops whose result is the union
+        of their levels.
+        """
+        m = m0
+        with _aqe_off(self.spark, aqe_off and self.bcast):
+            for i in range(iters):
+                nxt = self.nw(step(state, i))
+                if barrier_every and (i + 1) % barrier_every == 0:
+                    nxt = _plan_barrier(nxt)
+                elif until is not None:
+                    nxt = nxt.localCheckpoint(eager=False)
+                elif self.bcast or not chain or (
+                    (i + 1) % _CHAIN == 0 and i + 1 < iters
+                ):
+                    nxt = nxt.localCheckpoint(eager=True)
+                state = state + [nxt] if history else nxt
+                if until is None:
+                    continue
+                prev = m
+                if measure is None:
+                    m = nxt.count()
+                else:
+                    obs = Observation()
+                    nxt.observe(obs, measure.alias("m")).count()
+                    m = obs.get["m"]
+                if until(prev, m):
+                    break
+        self.last = m
+        return state
+
+
+def _peeled(prev, cur) -> bool:
+    """Stop test of the peeling loops: a fixpoint (the peel is monotone,
+    so a stable round equals running all of them) or nothing left."""
+    return cur in (0, prev)
+
+
+def _union(frames: list) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _derived(edges: DataFrame, tag: tuple, build) -> DataFrame:
@@ -111,25 +223,6 @@ def _derived(edges: DataFrame, tag: tuple, build) -> DataFrame:
     if tag not in slot:
         slot[tag] = build()
     return slot[tag]
-
-
-def _compact(df: DataFrame, rows_hint: int, rows_per_part: int = 200_000) -> DataFrame:
-    """Right-size partitions before materializing loop state.
-
-    Superstep cost on small-to-medium graphs is dominated by task launch,
-    not data: a 1M-row edge table inherited across 10 supersteps at the
-    global shuffle-partition count (e.g. 32) schedules 320 near-empty
-    tasks.  Coalesce (narrow, no shuffle) down to ~rows_per_part rows per
-    partition with a floor of 8; on a big cluster with billions of rows
-    the target exceeds the current count and this is a no-op, so
-    parallelism at scale is untouched.
-    """
-    target = max(8, rows_hint // rows_per_part)
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    return df.coalesce(target) if target < cur else df
 
 
 _BARRIER_DIRS: dict[str, str] = {}
@@ -200,20 +293,24 @@ def _sym(edges: DataFrame) -> DataFrame:
         # coalesce is narrow — re-reading the checkpoint merged into
         # right-sized partitions costs nothing and every superstep that
         # scans the edges schedules proportionally fewer tasks
-        return _compact(base, base.count())
+        return base.coalesce(_width(_ecount(edges, base)))
 
     return _derived(edges, ("sym",), build)
 
 
 def _ecount(edges: DataFrame, e: DataFrame) -> int:
-    """Edge count of the (checkpointed) symmetrized list, memoized with
-    the other derived tables — sizes the loops' shuffle width."""
+    """Edge count of the symmetrized list, memoized with the other
+    derived tables — sizes the loops' stage width."""
     return _derived(edges, ("symcount",), lambda: e.count())
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 40, barrier_every: int = 6
-) -> DataFrame:
+def _nnodes(edges: DataFrame, e: DataFrame) -> int:
+    """Distinct source vertices of ``e`` (|V| for a symmetric list),
+    memoized — the state-row bound of the vertex-state loops."""
+    return _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
+
+
+def connected_components(edges: DataFrame, max_iterations: int = 40) -> DataFrame:
     """Min-label propagation connected components → (id, component).
 
     ``component`` is the smallest vertex id reachable from ``id`` —
@@ -221,11 +318,9 @@ def connected_components(
     pipeline (SURVEY.md M2: blocking → scoring → connected components).
     Converges in O(diameter) supersteps (pointer jumping compresses
     that to ~O(log diameter)); each superstep is one join +
-    min-aggregation.  Every ``barrier_every`` supersteps the label
-    frame goes through :func:`_plan_barrier` — without it, loops that
-    reference their state more than once per iteration develop
-    exponentially slower jobs past ~10 chained pins (measured on q405's
-    high-diameter forest; see the barrier docstring).
+    min-aggregation.  Every 6th superstep goes through
+    :func:`_plan_barrier` — the step references its state more than
+    once (measured on q405's high-diameter forest).
     """
     e = _sym(edges)
     labels = (
@@ -233,38 +328,16 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    # Convergence detection: labels are monotone non-increasing (least of
-    # self and neighbor minima), so Σcomponent strictly decreases iff any
-    # vertex changed.  Comparing sums costs one tiny aggregate over the
-    # already-checkpointed label vector — no join, no extra shuffle —
-    # versus the join-and-count diff it replaces.  DECIMAL(38,0) keeps the
-    # sum exact for billions of 64-bit ids (no i64 overflow, no double
-    # rounding).
-    prev_sum = None
-    w = _width(_ecount(edges, e))
-    # Label/neighbor-min/hooked frames are all ≤|V| rows: under the cap
-    # broadcast them into every per-superstep join (the loop-family
-    # policy) — stats-less state frames otherwise plan SortMergeJoins
-    # that re-exchange the EDGE side every superstep, and checkpoint jobs
-    # bypass AQE's broadcast conversion.  Past the cap the shuffle plan
-    # is unchanged.  Labels are integers with min tie-breaks, so join
-    # strategy cannot perturb the result.
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
-    bx = (
-        (lambda d: F.broadcast(d))
-        if n_nodes <= _BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
-    for it in range(max_iterations):
-        # agg left un-wrapped: its hashpartitioning(nid) is reused by the
-        # join below (see _nw docstring on partitioning erasure)
-        lb = bx(labels)
+    ss = _Supersteps(e.sparkSession, _nnodes(edges, e), _ecount(edges, e))
+
+    def step(labels, _):
+        lb = ss.bx(labels)
         neighbor_min = (
-            _nw(e.join(lb, e.src == lb.id), w)
+            e.join(lb, e.src == lb.id)
             .groupBy(F.col("dst").alias("nid"))
             .agg(F.min("component").alias("nmin"))
         )
-        nm = bx(neighbor_min)
+        nm = ss.bx(neighbor_min)
         hooked = labels.join(nm, labels.id == nm.nid, "left").select(
             "id",
             F.least(
@@ -274,37 +347,29 @@ def connected_components(
         # pointer jumping: adopt the label of my label — halves chain depth
         # every iteration, so convergence is O(log diameter) supersteps
         # instead of O(diameter)
-        x, y = hooked.alias("x"), bx(hooked.alias("y"))
-        new_labels = (
-            _nw(x.join(y, F.col("x.component") == F.col("y.id"), "left"), w)
-            .select(
-                F.col("x.id").alias("id"),
-                F.least(
-                    F.col("x.component"),
-                    F.coalesce(F.col("y.component"), F.col("x.component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=False)
+        x, y = hooked.alias("x"), ss.bx(hooked.alias("y"))
+        return x.join(y, F.col("x.component") == F.col("y.id"), "left").select(
+            F.col("x.id").alias("id"),
+            F.least(
+                F.col("x.component"),
+                F.coalesce(F.col("y.component"), F.col("x.component")),
+            ).alias("component"),
         )
-        if (it + 1) % barrier_every == 0:
-            new_labels = _plan_barrier(new_labels)
-        # LAZY pin + observed count: the count is the one action that
-        # materializes the superstep's checkpoint (or first-reads the
-        # barrier scan), and the convergence sum rides it as a
-        # CollectMetrics observation — one job per superstep where the
-        # eager pin + agg-collect pair cost three (r13; the luby
-        # count-materializes-pin form with the metric folded in).
-        obs = Observation()
-        new_labels.observe(
-            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).count()
-        cur_sum = obs.get["s"]
-        labels = new_labels
-        # None == None breaks too: an empty graph is trivially converged
-        if it > 0 and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+
+    # Convergence: labels are monotone non-increasing (least of self and
+    # neighbor minima), so Σcomponent strictly decreases iff any vertex
+    # changed — one observed aggregate over the step's own pin job, no
+    # diff join.  DECIMAL(38,0) keeps the sum exact for billions of
+    # 64-bit ids.  An empty graph (sum None == None) is trivially
+    # converged.
+    return ss.run(
+        labels,
+        step,
+        iters=max_iterations,
+        barrier_every=6,
+        measure=F.sum(F.col("component").cast("decimal(38,0)")),
+        until=lambda prev, cur: cur == prev,
+    )
 
 
 def pagerank(
@@ -312,7 +377,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     variant: str = "pagerank",
-    checkpoint_interval: int = 5,
     weight_col: str | None = None,
     seeds: list | None = None,
 ) -> DataFrame:
@@ -353,15 +417,15 @@ def pagerank(
         .agg(F.sum("w").alias("deg"))
         .localCheckpoint(eager=True),
     )
-    n = deg.count()
-    deg = _derived(
-        edges,
-        ("deg-compact", weight_col),
-        lambda: _compact(deg, n).localCheckpoint(eager=True),  # reused every superstep
-    )
-    m = _derived(edges, ("ecount", weight_col), lambda: e.count())
+    n = _derived(edges, ("ndeg", weight_col), deg.count)
+    deg = deg.coalesce(_width(n))
+    m = _derived(edges, ("ecount", weight_col), e.count)
     if variant == "articlerank":
-        avg_deg = deg.agg(F.avg("deg")).collect()[0][0]
+        avg_deg = _derived(
+            edges,
+            ("avgdeg", weight_col),
+            lambda: deg.agg(F.avg("deg")).collect()[0][0],
+        )
         denom = F.col("deg") + F.lit(float(avg_deg))
     elif variant == "pagerank":
         denom = F.col("deg")
@@ -373,12 +437,10 @@ def pagerank(
     eshare = _derived(
         edges,
         ("eshare", weight_col, variant),
-        lambda: _compact(
-            e.join(deg, e.src == deg.id).select(
-                "src", "dst", (F.col("w") / denom).alias("share")
-            ),
-            m,
-        ).localCheckpoint(eager=True),
+        lambda: e.join(deg, e.src == deg.id)
+        .select("src", "dst", (F.col("w") / denom).alias("share"))
+        .coalesce(_width(m))
+        .localCheckpoint(eager=True),
     )
     if seeds is None:
         ranks = deg.select("id", F.lit(1.0 / n).alias("rank"))
@@ -399,13 +461,15 @@ def pagerank(
         base_col = F.when(
             F.col("id").isin(list(seeds)), F.lit((1.0 - damping) / len(seeds))
         ).otherwise(F.lit(0.0))
-    # rank vector is |V| rows — broadcast it while it fits comfortably;
-    # past that AQE picks a shuffle join and the loop still works.
-    bcast = n <= _BCAST_MAX_ROWS
-    w = _width(m)
-    with _aqe_off(e.sparkSession, bcast):
-      for i in range(iterations):
-        r = F.broadcast(ranks) if bcast else ranks
+    ss = _Supersteps(e.sparkSession, n, m)
+
+    def step(ranks, _):
+        r = ss.bx(ranks)
+        # e is symmetric in EVERY path (_sym() for unweighted input, the
+        # documented caller contract for weight_col), so every node has an
+        # in-edge and `contribs` covers the full node set with a non-NULL
+        # mass: no `deg LEFT JOIN contribs` (that identity cost one
+        # SortMergeJoin + an exchange and sort of both sides per superstep)
         contribs = (
             eshare.join(r, eshare.src == r.id)
             .select(
@@ -415,48 +479,14 @@ def pagerank(
             .groupBy("to")
             .agg(F.sum("c").alias("mass"))
         )
-        # e is symmetric in EVERY path (_sym() for unweighted input, the
-        # documented caller contract for weight_col), so each node has an
-        # in-edge and `contribs` already covers the full node set: the
-        # former `deg LEFT JOIN contribs` was an identity costing one
-        # SortMergeJoin + an exchange and sort of BOTH sides per superstep
-        # (checkpointed frames carry no stats and checkpoint jobs bypass
-        # AQE's dynamic broadcast conversion).  `mass` is never NULL for
-        # the same reason, so the coalesce is gone too — per-node values
-        # are bit-identical.  On the bcast path the agg is plan-terminal
-        # (next use is a broadcast collect) → _nw-collapse it; on the
-        # shuffle path leave it un-wrapped so hashpartitioning(to→id)
-        # feeds the next superstep's rank join exchange-free.
-        ranks = (
-            (_nw(contribs, w) if bcast else contribs)
-            .select(F.col("to").alias("id"), "mass")
-            .select(
-                "id",
-                (base_col + F.lit(damping) * F.col("mass")).alias("rank"),
-            )
+        return contribs.select(F.col("to").alias("id"), "mass").select(
+            "id", (base_col + F.lit(damping) * F.col("mass")).alias("rank")
         )
-        if bcast:
-            # a forced broadcast of an UNcheckpointed superstep chain is
-            # quadratic: materializing superstep k's broadcast re-runs
-            # every nested broadcast below it as its own job (measured
-            # 18 jobs / 7.2s vs 2.9s for 4 LPA supersteps at sf0.1).
-            # The vector is <= _BCAST_MAX_ROWS by definition of this
-            # branch, so pinning it per superstep is one tiny blocking
-            # job that makes the next broadcast (and any multi-reference
-            # caller) read a flat checkpoint instead of a chain.
-            ranks = _compact(ranks, n).localCheckpoint(eager=True)
-        # big-vector path: truncate lineage periodically, not per-
-        # superstep (each eager checkpoint of a large vector is a real
-        # blocking job; a few chained shuffle-join supersteps plan fine
-        # and run as ONE job).
-        elif (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-            ranks = _compact(ranks, n).localCheckpoint(eager=True)
-    return ranks
+
+    return ss.run(ranks, step, iters=iterations, aqe_off=True, chain=True)
 
 
-def label_propagation(
-    edges: DataFrame, iterations: int = 4, checkpoint_interval: int = 4
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """Synchronous label propagation → (id, community).
 
     Deterministic variant of GDS Louvain/LPA community detection (writeup
@@ -469,42 +499,28 @@ def label_propagation(
     labels = e.select(F.col("src").alias("id")).distinct().withColumn(
         "community", F.col("id")
     )
-    bcast = labels.count() <= _BCAST_MAX_ROWS  # label vector small → map-side join
-    w = _width(_ecount(edges, e))
-    for i in range(iterations):
+    ss = _Supersteps(e.sparkSession, _nnodes(edges, e), _ecount(edges, e))
+
+    def step(labels, _):
         # ONE exchange replaces the former count-then-argmax pair:
         # mode(community, deterministic=True) is EXACTLY "most frequent
         # label, ties to smallest" (a TypedImperativeAggregate with
         # map-side partial count maps, so shuffle bytes are the partial
         # (community → cnt) maps — the same information the two-phase
         # form shipped, in half the shuffle rounds).
-        lab = F.broadcast(labels) if bcast else labels
+        lab = ss.bx(labels)
         best = (
             e.join(lab, e.src == lab.id)
             .groupBy(F.col("dst").alias("nid"))
             .agg(F.mode("community", True).alias("new_community"))
         )
-        # label update: best is ≤|V| rows — broadcast it under the cap
-        # (the left join's right side) so the checkpointed label vector
-        # is never re-exchanged/sorted into a SortMergeJoin; on the
-        # bcast path the agg is then plan-terminal → _nw-collapse it.
-        # Past the cap keep the agg un-wrapped so hashpartitioning(nid)
-        # feeds the shuffle join exchange-free.
-        b = F.broadcast(_nw(best, w)) if bcast else best
-        labels = _nw(labels.join(b, labels.id == b.nid, "left"), w).select(
+        b = ss.bx(ss.nw(best))
+        return labels.join(b, labels.id == b.nid, "left").select(
             "id",
             F.coalesce(F.col("new_community"), F.col("community")).alias("community"),
         )
-        if bcast:
-            # see pagerank: broadcasting an uncheckpointed chain re-runs
-            # every nested broadcast per materialization — pin the
-            # (small) vector each superstep so the next broadcast (and
-            # any multi-reference caller, e.g. modularity) reads a flat
-            # plan.
-            labels = labels.localCheckpoint(eager=True)
-        elif (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+
+    return ss.run(labels, step, iters=iterations, chain=True)
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> float:
@@ -581,7 +597,7 @@ def louvain_level(
     n, m = stats.n, (stats.degsum or 0.0) / 2.0
     if n == 0:
         return deg.select("id", F.col("id").alias("community"))
-    deg = _compact(deg, n)
+    deg = deg.coalesce(_width(n))
     # carry (id, community, deg) as ONE state table: the candidate scoring
     # needs a node's current community AND degree, and fusing them removes
     # a per-round |V|-row join (and its broadcast materialization job)
@@ -595,42 +611,35 @@ def louvain_level(
         # row) must survive with its init community, as the pre-fusion
         # contract guaranteed; deg 0 is correct for it (it can never move
         # — it has no neighboring communities to join).
-        state = _compact(
+        state = (
             init.localCheckpoint(eager=True)
             .join(deg.select("id", "deg"), "id", "left")
-            .select("id", "community", F.coalesce("deg", F.lit(0.0)).alias("deg")),
-            n,
+            .select("id", "community", F.coalesce("deg", F.lit(0.0)).alias("deg"))
+            .coalesce(_width(n))
         )
-    bcast = n <= _BCAST_MAX_ROWS
-    w_stage = _width(e_rows)
-    for _ in range(rounds):
+    ss = _Supersteps(e.sparkSession, n, e_rows)
+
+    def step(state, _):
         lab_dst = state.select(
             F.col("id").alias("dst"), F.col("community").alias("n_comm")
         )
-        # w(i→C): edge mass from i into each neighboring community C — the
-        # label vector is |V| rows vs |E| edges, so map-side join while it
-        # fits.  sum(w) == count for the unit-weight path (integer-valued
-        # double addition is exact), so one formulation serves both.
-        w_ic = _nw(
-            e.join(F.broadcast(lab_dst) if bcast else lab_dst, "dst")
+        # w(i→C): edge mass from i into each neighboring community C.
+        # sum(w) == count for the unit-weight path (integer-valued double
+        # addition is exact), so one formulation serves both.
+        w_ic = ss.nw(
+            e.join(ss.bx(lab_dst), "dst")
             .groupBy(F.col("src").alias("id"), "n_comm")
-            .agg(F.sum("w").alias("w_ic")),
-            w_stage,
+            .agg(F.sum("w").alias("w_ic"))
         )
         # Σdeg over each community, minus i's own degree when i ∈ C.
+        # degsum and state both broadcast under the cap, so w_ic stays in
+        # place (as shuffle joins they re-exchanged it twice).
         degsum = state.groupBy("community").agg(F.sum("deg").alias("deg_c"))
-        # degsum (≤ #communities rows) and state (≤ |V| rows) both
-        # broadcast under the cap: w_ic leaves its groupBy partitioned
-        # by (id, n_comm), so the former SortMergeJoins re-exchanged it
-        # TWICE (→ n_comm for degsum, → id for state) plus sorted both
-        # small sides — broadcast joins keep w_ic in place and the only
-        # remaining exchange is the groupBy("id") below.  Past the cap
-        # the shuffle plan is unchanged.
-        dg = F.broadcast(degsum) if bcast else degsum
-        st = state.withColumnRenamed("community", "cur")
+        dg = ss.bx(degsum)
         cand = (
-            w_ic.join(dg, w_ic.n_comm == dg.community)
-            .join(F.broadcast(st) if bcast else st, "id")
+            w_ic.join(dg, w_ic.n_comm == dg.community).join(
+                ss.bx(state.withColumnRenamed("community", "cur")), "id"
+            )
         ).select(
             "id",
             "n_comm",
@@ -647,10 +656,6 @@ def louvain_level(
                 / F.lit(2 * m)
             ).alias("gain"),
         )
-        # on the bcast path best (≤|V| rows) broadcasts into the state
-        # join below (left join, right side), so the checkpointed state
-        # never re-exchanges; past the cap the agg stays un-wrapped so
-        # hashpartitioning(id) feeds the shuffle join exchange-free
         best = cand.groupBy("id").agg(
             F.expr("max_by(n_comm, struct(gain, -n_comm))").alias("best_comm"),
             F.max(F.struct("gain", (-F.col("n_comm")).alias("nc"))).alias("best_key"),
@@ -658,30 +663,19 @@ def louvain_level(
                 F.when(F.col("n_comm") == F.col("cur"), F.col("gain"))
             ).alias("cur_gain"),
         )
-        state = _compact(
-            _nw(
-                state.join(
-                    F.broadcast(_nw(best, w_stage)) if bcast else best,
-                    "id",
-                    "left",
-                ),
-                w_stage,
+        return state.join(ss.bx(ss.nw(best)), "id", "left").select(
+            "id",
+            F.when(
+                F.col("best_comm").isNotNull()
+                & (F.col("best_key.gain") > F.coalesce(F.col("cur_gain"), F.lit(-1e18))),
+                F.col("best_comm"),
             )
-            .select(
-                "id",
-                F.when(
-                    F.col("best_comm").isNotNull()
-                    & (F.col("best_key.gain") > F.coalesce(F.col("cur_gain"), F.lit(-1e18))),
-                    F.col("best_comm"),
-                )
-                .otherwise(F.col("community"))
-                .alias("community"),
-                "deg",
-            )
-            .localCheckpoint(eager=True),
-            n,
+            .otherwise(F.col("community"))
+            .alias("community"),
+            "deg",
         )
-    return state.select("id", "community")
+
+    return ss.run(state, step, iters=rounds).select("id", "community")
 
 
 def louvain(
@@ -705,54 +699,37 @@ def louvain(
     """
     # ``level1``: a precomputed first-level assignment (callers that also
     # report level 1 share one build — the dominant cost of the hierarchy)
-    level_labels = (
-        level1 if level1 is not None else louvain_level(edges, rounds=rounds)
-    )  # cur-graph node → community
-    composed = level_labels  # ORIGINAL vertex → latest-level community
-    cur_edges = _sym(edges).withColumn("w", F.lit(1.0))
-    for _ in range(1, levels):
-        lab_src = level_labels.select(
-            F.col("id").alias("src"), F.col("community").alias("c_src")
-        )
-        lab_dst = level_labels.select(
-            F.col("id").alias("dst"), F.col("community").alias("c_dst")
-        )
-        # level_labels has ≤ |V| rows at every level (labels only shrink
-        # under contraction), so the memoized node count of the ORIGINAL
-        # graph is a valid one-sided broadcast bound — the former
-        # per-level count() job existed only for this decision
-        n = _derived(
-            edges,
-            ("nnodes-sym",),
-            lambda: _sym(edges).select("src").distinct().count(),
-        )
-        bsrc = F.broadcast(lab_src) if n <= _BCAST_MAX_ROWS else lab_src
-        bdst = F.broadcast(lab_dst) if n <= _BCAST_MAX_ROWS else lab_dst
-        # the contraction/remap tables are community-count-sized — run
-        # their materializations at the same right-sized width as the
-        # local-move loops
-        w_stage = _width(_ecount(edges, _sym(edges)))
-        contracted = (
-            _nw(
-                cur_edges.join(bsrc, "src")
-                .join(bdst, "dst")
-                .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
-                .agg(F.sum("w").alias("w")),
-                w_stage,
-            )
-            .localCheckpoint(eager=True)
+    if level1 is None:
+        level1 = louvain_level(edges, rounds=rounds)
+    e = _sym(edges)
+    # level labels have ≤ |V| rows at every level (labels only shrink
+    # under contraction), so the ORIGINAL graph's node count bounds them
+    ss = _Supersteps(e.sparkSession, _nnodes(edges, e), _ecount(edges, e))
+    # the current level's graph and labels; the driver's state is the
+    # ORIGINAL vertex → latest-level community map
+    level = [e.withColumn("w", F.lit(1.0)), level1]
+
+    def step(composed, _):
+        cur_edges, labels = level
+        lab_src = labels.select(F.col("id").alias("src"), F.col("community").alias("c_src"))
+        lab_dst = labels.select(F.col("id").alias("dst"), F.col("community").alias("c_dst"))
+        # not pinned here: louvain_level pins its weighted input itself
+        contracted = ss.nw(
+            cur_edges.join(ss.bx(lab_src), "src")
+            .join(ss.bx(lab_dst), "dst")
+            .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
+            .agg(F.sum("w").alias("w"))
         )
         upper = louvain_level(contracted, rounds=rounds, weight_col="w")
+        level[:] = [contracted, upper]
         remap = upper.select(
             F.col("id").alias("community"), F.col("community").alias("upper_comm")
         )
-        composed = (
-            _nw(composed.join(remap, "community"), w_stage)
-            .select("id", F.col("upper_comm").alias("community"))
-            .localCheckpoint(eager=True)
+        return composed.join(remap, "community").select(
+            "id", F.col("upper_comm").alias("community")
         )
-        cur_edges, level_labels = contracted, upper
-    return composed
+
+    return ss.run(level1, step, iters=levels - 1)
 
 
 def bfs_distances(
@@ -762,88 +739,57 @@ def bfs_distances(
 
     Synchronized frontier expansion (the Pregel BFS): each hop joins the
     previous frontier into the edge list, anti-joins already-settled
-    vertices, and checkpoints the (small) frontier.  First-reach level is
-    the minimum distance, so the result is exact and deterministic.
-    Frontiers are broadcast while small; the edge side never moves.
+    vertices, and pins the new level.  First-reach level is the minimum
+    distance, so the result is exact and deterministic.  The settled set
+    is the lazy union of the per-level pins (re-pinning the growing union
+    each level was a third job per hop carrying no new information).
     (Reference analogue: the Cypher neighborhood expansions, writeup p.5
     Q6 two-hop — this generalizes them to k hops with distances.)
     """
     e = _sym(edges)
-    # LAZY pin + count: the count is the action that materializes the
-    # checkpoint, so each level costs ONE job instead of a dedicated
-    # eager-pin job plus a count job (r12, guide §1.2 job floor).
+    # lazy pin + count: one job materializes the checkpoint (r12)
     dist0 = sources.select(
         "id", F.lit(0).cast("int").alias("dist")
     ).localCheckpoint(eager=False)
-    n_frontier = dist0.count()
-    # settled vertices ride as a LIST of per-level pins unioned lazily —
-    # re-pinning the growing union each level was a third job per hop
-    # carrying no new information (every member is already cached; the
-    # union depth is bounded by max_hops)
-    settled = [dist0]
-    dist = dist0
-    frontier = dist0.select("id")
-    w = _width(_ecount(edges, e))
-    # the settled set is ≤ |V| BY CONSTRUCTION (one row per reached
-    # vertex), so one memoized node bound decides broadcastability for
-    # the whole loop (the CC policy)
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
-    bcast = n_nodes <= _BCAST_MAX_ROWS
-    # under the cap every join is hinted-broadcast and the one distinct
-    # exchange is _nw-sized — the AQE-off loop class (see _aqe_off)
-    with _aqe_off(e.sparkSession, bcast):
-      for h in range(1, max_hops + 1):
-        if bcast:
+    dist0.count()
+    # the settled set is ≤ |V| BY CONSTRUCTION (one row per reached vertex)
+    ss = _Supersteps(e.sparkSession, _nnodes(edges, e), _ecount(edges, e))
+
+    def step(levels, i):
+        h = i + 1
+        dist = _union(levels)
+        if ss.bcast:
             # ONE broadcast of the settled union serves BOTH per-level
             # joins (r13): the expansion join keeps the frontier filter
             # (dist = h-1) in the join CONDITION, so its broadcast
             # subtree canonicalizes identically to the anti-join's and
-            # ReuseExchange builds it once — replacing the former
-            # frontier broadcast + the anti-join's unhinted SortMergeJoin
-            # (which re-exchanged the settled side every level).  ids
-            # are unique in `dist`, so the condition-filtered probe
-            # matches at most one build row, exactly the old frontier
-            # semantics.
-            st1, st2 = F.broadcast(dist), F.broadcast(dist)
+            # ReuseExchange builds it once.  ids are unique in `dist`, so
+            # the condition-filtered probe matches at most one build row,
+            # exactly the frontier semantics.
+            st1, st2 = ss.bx(dist), ss.bx(dist)
             nxt = (
-                _nw(
-                    e.join(
-                        st1,
-                        (e.src == st1["id"]) & (st1["dist"] == F.lit(h - 1)),
-                    )
-                    .select(F.col("dst").alias("id"))
-                    .distinct()
-                    .join(st2, "id", "left_anti"),
-                    w,
-                )
-                .withColumn("dist", F.lit(h).cast("int"))
-                .localCheckpoint(eager=False)
+                e.join(st1, (e.src == st1["id"]) & (st1["dist"] == F.lit(h - 1)))
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(st2, "id", "left_anti")
             )
         else:
-            # past the cap (the 100 TB regime) keep the frontier-keyed
-            # shuffle shape: the frontier side is far smaller than the
-            # settled union, and AQE's dynamic broadcast conversion
-            # still applies when it shrinks again
+            # past the cap keep the frontier-keyed shuffle shape: the
+            # frontier side is far smaller than the settled union
+            frontier = levels[-1].select("id")
             nxt = (
-                _nw(
-                    e.join(frontier, e.src == frontier["id"])
-                    .select(F.col("dst").alias("id"))
-                    .distinct()
-                    .join(dist, "id", "left_anti"),
-                    w,
-                )
-                .withColumn("dist", F.lit(h).cast("int"))
-                .localCheckpoint(eager=False)
+                e.join(frontier, e.src == frontier["id"])
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(dist, "id", "left_anti")
             )
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        settled.append(nxt)
-        dist = settled[0]
-        for s in settled[1:]:
-            dist = dist.unionByName(s)
-        frontier = nxt.select("id")
-    return dist
+        return nxt.withColumn("dist", F.lit(h).cast("int"))
+
+    levels = ss.run(
+        [dist0], step, iters=max_hops, aqe_off=True, history=True,
+        until=lambda _, n: n == 0,
+    )
+    return _union(levels[:-1] if ss.last == 0 else levels)
 
 
 def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
@@ -856,46 +802,38 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
 
     Scale shape: one round = two semi-joins of the (pinned) edge list
     against the active set + a src-keyed count — the active set only
-    shrinks, is broadcast while under ``_BCAST_MAX_ROWS``, and is
-    checkpointed per round per the loop-state discipline.  The edge side
+    shrinks, so its initial size bounds every round.  The edge side
     never re-shuffles.
     """
     e = _sym(edges)
-    # lazy pin + count: the count materializes the checkpoint — one job,
-    # not two (the bfs_distances r12 pattern)
+    # lazy pin + count: one job materializes the checkpoint (r12)
     active = (
         e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=False)
     )
     n = active.count()
-    w = _width(_ecount(edges, e))
+    ss = _Supersteps(e.sparkSession, n, _ecount(edges, e))
 
-    def in_core_deg(act: DataFrame, act_rows: int) -> DataFrame:
-        a = F.broadcast(act) if act_rows <= _BCAST_MAX_ROWS else act
-        return _nw(
+    def in_core_deg(act: DataFrame) -> DataFrame:
+        a = ss.bx(act)
+        return ss.nw(
             e.join(a.select(F.col("id").alias("src")), "src", "left_semi")
             .join(a.select(F.col("id").alias("dst")), "dst", "left_semi")
             .groupBy("src")
-            .agg(F.count(F.lit(1)).alias("core_deg")),
-            w,
+            .agg(F.count(F.lit(1)).alias("core_deg"))
         )
 
-    for _ in range(rounds):
-        nxt = (
-            in_core_deg(active, n)
-            .where(F.col("core_deg") >= k)
-            .select(F.col("src").alias("id"))
-            .localCheckpoint(eager=False)
-        )
-        n_nxt = nxt.count()  # the action that materializes the pin
-        if n_nxt == n:  # fixpoint — further rounds are no-ops
-            active = nxt
-            break
-        active, n = nxt, n_nxt
-        if n == 0:
-            break
-    if n == 0:
+    active = ss.run(
+        active,
+        lambda act, _: in_core_deg(act)
+        .where(F.col("core_deg") >= k)
+        .select(F.col("src").alias("id")),
+        iters=rounds,
+        m0=n,
+        until=_peeled,
+    )
+    if ss.last == 0:
         return active.withColumn("core_deg", F.lit(0).cast("long")).limit(0)
-    return in_core_deg(active, n).select(F.col("src").alias("id"), "core_deg")
+    return in_core_deg(active).select(F.col("src").alias("id"), "core_deg")
 
 
 def ktruss(edges_upper: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
@@ -913,33 +851,23 @@ def ktruss(edges_upper: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     Scale shape: one round = the q89 triangle enumeration on the pinned
     survivor set (two self-joins, both keyed on edge endpoints), a
     3-role union exploding each triangle to its edges, and an
-    (src, dst)-keyed count whose partitioning feeds the survivor join
-    exchange-free (NOT `_nw`-wrapped — the loop rule).  The edge set
-    only shrinks; fixpoint exits early.
+    (src, dst)-keyed count.  The edge set only shrinks, so the initial
+    edge count bounds every round's join sides; fixpoint exits early.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    # lazy pin + count: one job, not two (the bfs_distances r12 pattern)
+    # lazy pin + count: one job materializes the checkpoint (r12)
     e = edges_upper.select("src", "dst").localCheckpoint(eager=False)
     m = e.count()
-    w = _width(m)
     thr = k - 2
-    # the survivor edge set only SHRINKS, so the initial edge count is a
-    # one-sided bound for every round's join sides (the q129/CC policy):
-    # under the cap the triangle self-joins and the survivor⋈support
-    # join are hinted-broadcast (the stats-less pinned frames otherwise
-    # plan SortMergeJoins that re-exchange both sides every round), and
-    # the loop joins the scoped-AQE-off class.  Past the cap the shuffle
-    # plan is unchanged.
-    bcast = m <= _BCAST_MAX_ROWS
-    bx = (lambda d: F.broadcast(d)) if bcast else (lambda d: d)
+    ss = _Supersteps(e.sparkSession, m, m)
 
     def support(edges_cur: DataFrame) -> DataFrame:
         ab, bc, ac = (edges_cur.alias(x) for x in ("ab", "bc", "ac"))
         tri = (
-            ab.join(bx(bc), F.col("ab.dst") == F.col("bc.src"))
+            ab.join(ss.bx(bc), F.col("ab.dst") == F.col("bc.src"))
             .join(
-                bx(ac),
+                ss.bx(ac),
                 (F.col("ac.src") == F.col("ab.src"))
                 & (F.col("ac.dst") == F.col("bc.dst")),
             )
@@ -956,19 +884,17 @@ def ktruss(edges_upper: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         )
         return roles.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("support"))
 
-    with _aqe_off(e.sparkSession, bcast):
-      for _ in range(rounds):
-        nxt = _nw(
-            e.join(bx(support(e)), ["src", "dst"]).where(F.col("support") >= thr), w
-        ).select("src", "dst").localCheckpoint(eager=False)
-        m_nxt = nxt.count()  # the action that materializes the pin
-        if m_nxt == m:  # fixpoint — further rounds are no-ops
-            e = nxt
-            break
-        e, m = nxt, m_nxt
-        if m == 0:
-            break
-    return e.join(bx(support(e)), ["src", "dst"], "left").select(
+    e = ss.run(
+        e,
+        lambda cur, _: cur.join(ss.bx(support(cur)), ["src", "dst"])
+        .where(F.col("support") >= thr)
+        .select("src", "dst"),
+        iters=rounds,
+        aqe_off=True,
+        m0=m,
+        until=_peeled,
+    )
+    return e.join(ss.bx(support(e)), ["src", "dst"], "left").select(
         "src", "dst", F.coalesce("support", F.lit(0)).alias("support")
     )
 
@@ -983,52 +909,36 @@ def multi_bfs_distances(
     supersteps as one, with |S|·|frontier| work per level instead of p
     sequential loops.  ``sources`` must have columns (pivot, id).
 
-    The settled set and frontier follow bfs_distances' conventions
-    exactly: per-level checkpoint, plan-local width, broadcast while
-    small with shuffle fallback past the cap."""
+    The settled set follows bfs_distances' conventions exactly."""
     e = _sym(edges)
-    # lazy pin + count and the settled-pin list: one job per level
-    # instead of three (see bfs_distances)
+    # lazy pin + count: one job materializes the checkpoint (r12)
     dist0 = sources.select(
         "pivot", "id", F.lit(0).cast("int").alias("dist")
     ).localCheckpoint(eager=False)
-    n_frontier = dist0.count()
-    settled = [dist0]
-    dist = dist0
-    frontier = dist0.select("pivot", "id")
-    w = _width(_ecount(edges, e))
-    # state is ≤ |pivots|·|V| rows BY CONSTRUCTION — one up-front bound
-    # (the betweenness policy) decides the anti-join's broadcast for the
-    # whole loop; the expansion join stays frontier-keyed (its key is
-    # bare `id`, a different broadcast mode, so nothing would be reused)
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
-    bcast_state = n_frontier * n_nodes <= _BCAST_MAX_ROWS
-    # under the state bound both joins are hinted-broadcast and the one
-    # distinct exchange is _nw-sized — the AQE-off loop class
-    with _aqe_off(e.sparkSession, bcast_state):
-      for h in range(1, max_hops + 1):
-        fr = F.broadcast(frontier) if n_frontier <= _BCAST_MAX_ROWS else frontier
-        st = F.broadcast(dist) if bcast_state else dist
-        nxt = (
-            _nw(
-                e.join(fr, e.src == fr["id"])
-                .select("pivot", F.col("dst").alias("id"))
-                .distinct()
-                .join(st, ["pivot", "id"], "left_anti"),
-                w,
-            )
-            .withColumn("dist", F.lit(h).cast("int"))
-            .localCheckpoint(eager=False)
+    n_sources = dist0.count()
+    # state is ≤ |sources|·|V| rows BY CONSTRUCTION
+    ss = _Supersteps(
+        e.sparkSession, n_sources * _nnodes(edges, e), _ecount(edges, e)
+    )
+
+    def step(levels, i):
+        # the expansion join stays frontier-keyed: its key is bare `id`, a
+        # different broadcast mode from the (pivot, id) anti-join, so
+        # bfs_distances' one shared broadcast would not be reused here
+        fr = ss.bx(levels[-1].select("pivot", "id"))
+        return (
+            e.join(fr, e.src == fr["id"])
+            .select("pivot", F.col("dst").alias("id"))
+            .distinct()
+            .join(ss.bx(_union(levels)), ["pivot", "id"], "left_anti")
+            .withColumn("dist", F.lit(i + 1).cast("int"))
         )
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        settled.append(nxt)
-        dist = settled[0]
-        for s in settled[1:]:
-            dist = dist.unionByName(s)
-        frontier = nxt.select("pivot", "id")
-    return dist
+
+    levels = ss.run(
+        [dist0], step, iters=max_hops, aqe_off=True, history=True,
+        until=lambda _, n: n == 0,
+    )
+    return _union(levels[:-1] if ss.last == 0 else levels)
 
 
 def sssp_hop_limited(
@@ -1039,10 +949,8 @@ def sssp_hop_limited(
     list (src, dst, weight), integer weights so min-distances are exact
     and engine-portable (no float accumulation order anywhere).
 
-    The distance vector starts as one row and grows to ≤|V|; it is
-    pinned per superstep (the force-broadcast loop discipline) and
-    broadcast while under ``_BCAST_MAX_ROWS``, falling back to a shuffle
-    join that AQE can re-convert.  The edge list is referenced every
+    The distance vector starts as one row and grows to ≤|V|, which
+    bounds it for every superstep.  The edge list is referenced every
     superstep — callers pass an already-materialized frame (the builders
     checkpoint theirs).
     """
@@ -1051,38 +959,19 @@ def sssp_hop_limited(
     dist = _local_values_df(
         spark, [[int(source), 0]], "id bigint, dist bigint"
     ).localCheckpoint(eager=True)
-    w = _width(_ecount(wedges, e))
-    # dist is <= |V| rows BY CONSTRUCTION (one row per reached vertex),
-    # so ONE up-front memoized node bound decides broadcastability for
-    # every superstep — the former per-iteration dist.count() existed
-    # only for this decision and cost one extra job per superstep
-    # (min-distances are exact integers, so join strategy cannot perturb
-    # the result; past the cap the shuffle plan is unchanged).
-    n_nodes = _derived(
-        wedges, ("nnodes",), lambda: e.select("src").distinct().count()
-    )
-    bcast = n_nodes <= _BCAST_MAX_ROWS
-    # single hinted-broadcast join + one agg per relaxation: the AQE-off
-    # loop class (see _aqe_off; q129 A/B 2.77→2.33 s, 22→15 jobs)
-    with _aqe_off(e.sparkSession, bcast):
-      for _ in range(iterations):
-        d = F.broadcast(dist) if bcast else dist
+    ss = _Supersteps(spark, _nnodes(wedges, e), _ecount(wedges, e))
+
+    def step(dist, _):
+        d = ss.bx(dist)
         relax = e.join(d, e.src == d["id"]).select(
             F.col("dst").alias("id"), (d["dist"] + F.col("w")).alias("dist")
         )
-        dist = (
-            _nw(
-                dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist")),
-                w,
-            )
-            .localCheckpoint(eager=True)
-        )
-    return dist
+        return dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist"))
+
+    return ss.run(dist, step, iters=iterations, aqe_off=True)
 
 
-def hits(
-    edges: DataFrame, iterations: int = 5, checkpoint_each: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def hits(edges: DataFrame, iterations: int = 5) -> tuple[DataFrame, DataFrame]:
     """HITS (Kleinberg) hubs & authorities on a DIRECTED edge list →
     ((src id, hub), (dst id, auth)).
 
@@ -1119,40 +1008,37 @@ def hits(
         lambda: edges.select("src", "dst").distinct().localCheckpoint(eager=True),
     )
     m = _derived(edges, ("hits-ecount",), lambda: e.count())
-    n_src = _derived(
-        edges, ("hits-nsrc",), lambda: e.select("src").distinct().count()
+    # one bound for both vectors: hubs and authorities are ≤ |V| rows
+    n = _derived(
+        edges,
+        ("hits-n",),
+        lambda: e.select(F.explode(F.array("src", "dst"))).distinct().count(),
     )
-    n_dst = _derived(
-        edges, ("hits-ndst",), lambda: e.select("dst").distinct().count()
+    ss = _Supersteps(e.sparkSession, n, m)
+    hubs = (
+        e.select("src").distinct().withColumn("h", F.lit(1.0))
+        .coalesce(_width(n))
+        .localCheckpoint(eager=True)
     )
-    w = _width(m)
-    # vectors under the cap join broadcast (map-side over the pinned edge
-    # list); above it the shuffle join takes over — same policy as the
-    # pagerank loop
-    bc_h = (lambda d: F.broadcast(d)) if n_src <= _BCAST_MAX_ROWS else (lambda d: d)
-    bc_a = (lambda d: F.broadcast(d)) if n_dst <= _BCAST_MAX_ROWS else (lambda d: d)
-    hubs = e.select("src").distinct().withColumn("h", F.lit(1.0))
-    if checkpoint_each:
-        hubs = _compact(hubs, n_src).localCheckpoint(eager=True)
-    a_raw = None
-    # hinted-broadcast joins + aggs only: the AQE-off loop class
-    # (see _aqe_off)
-    with _aqe_off(e.sparkSession, n_src <= _BCAST_MAX_ROWS):
-      for _ in range(iterations):
-        # one un-normalized double half-step per pin: a_raw is referenced
-        # once (the h_raw join) inside the one action that pins `hubs`,
-        # so nothing recomputes; only `hubs` crosses iterations.
-        a_raw = _nw(
-            e.join(bc_h(hubs), "src").groupBy("dst").agg(F.sum("h").alias("a")), w
+
+    def auths(hubs: DataFrame) -> DataFrame:
+        return ss.nw(
+            e.join(ss.bx(hubs), "src").groupBy("dst").agg(F.sum("h").alias("a"))
         )
-        hubs = _nw(
-            e.join(bc_a(a_raw), "dst").groupBy("src").agg(F.sum("a").alias("h")), w
+
+    def step(hubs, _):
+        # one un-normalized double half-step per pin: the authority
+        # vector is referenced once, inside the one action that pins the
+        # next hub vector, so nothing recomputes
+        return e.join(ss.bx(auths(hubs[-1])), "dst").groupBy("src").agg(
+            F.sum("a").alias("h")
         )
-        if checkpoint_each:
-            hubs = _compact(hubs, n_src).localCheckpoint(eager=True)
+
+    hub_steps = ss.run([hubs], step, iters=iterations, aqe_off=True, history=True)
     # single final normalization of each returned side (exact-cancel
-    # argument above).  auths derives from the PINNED penultimate hub
-    # vector, so consuming it never re-runs the loop.
+    # argument above).  The authorities derive from the PINNED
+    # penultimate hub vector, so consuming them never re-runs the loop.
+    hubs, a_raw = hub_steps[-1], auths(hub_steps[-2])
     h_norm = hubs.agg(F.sqrt(F.sum(F.col("h") * F.col("h"))).alias("nrm"))
     hubs_out = hubs.crossJoin(F.broadcast(h_norm)).select(
         "src", (F.col("h") / F.col("nrm")).alias("h")
@@ -1177,27 +1063,19 @@ def betweenness_sampled(
 
     Both sweeps are vectorized over ALL sources at once: state is keyed
     (source, vertex), each superstep is one keyed join + aggregate over
-    the pinned symmetric edge list, checkpointed per level (loop-state
-    discipline).  sigma stays integral (exact); delta rounds to 6 dp per
-    level — the iterative-oracle float convention.  Scale: |S|·|V| state
-    rows, |S|·|E| join work per level, sources are a handful of pivots.
+    the pinned symmetric edge list, pinned per level.  The per-level
+    state is bounded by |S|·|V| BY CONSTRUCTION.  sigma stays integral
+    (exact); delta rounds to 6 dp per level — the iterative-oracle float
+    convention.  Scale: |S|·|V| state rows, |S|·|E| join work per level,
+    sources are a handful of pivots.
     """
     e = _sym(edges)
     if not sources:
         raise ValueError("betweenness_sampled needs at least one source")
     spark = e.sparkSession
-    # Per-level state (visited/frontier/delta) is bounded by |S|·|V| BY
-    # CONSTRUCTION, so ONE up-front bound decides broadcastability for the
-    # whole loop (no per-level counts): under the cap every per-level join
-    # broadcasts the state side and the pinned edge list never moves —
-    # without the hint each level ran 2 SortMergeJoins whose exchanges
-    # re-shuffled both sides (state frames carry no stats and checkpoint
-    # jobs bypass AQE's broadcast conversion).  Past the cap the shuffle
-    # plan is unchanged.  sigma is integral (join strategy can't perturb
-    # it); delta keeps the per-level round(…, 6) convention.
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
-    small = len(sources) * n_nodes <= _BCAST_MAX_ROWS
-    bx = (lambda d: F.broadcast(d)) if small else (lambda d: d)
+    ss = _Supersteps(
+        spark, len(sources) * _nnodes(edges, e), _ecount(edges, e)
+    )
     # NOT a VALUES relation: r13 re-tested the r12 hypothesis that the
     # duplicated-attribute projection (s, s AS v) caused the Catalyst
     # attribute-rewrite NoSuchElementException ("key not found: v#…") —
@@ -1210,38 +1088,28 @@ def betweenness_sampled(
     lvl0 = src_df.select(
         "s", F.col("s").alias("v"), F.lit(0).alias("dist"), F.lit(1.0).alias("sigma")
     ).localCheckpoint(eager=True)
-    # per-level pins unioned lazily (the bfs_distances r12 pattern): each
-    # level pins only ITS rows instead of re-caching the whole growing
-    # visited set every level; the union depth is bounded by max_depth
-    levels = [lvl0]
-    visited = lvl0
-    for lvl in range(1, max_depth + 1):
+
+    def forward(levels, i):
         frontier = levels[-1]
-        nxt = (
-            e.join(bx(frontier), frontier.v == e.src)
+        return (
+            e.join(ss.bx(frontier), frontier.v == e.src)
             .groupBy("s", F.col("dst").alias("nv"))
             .agg(F.sum("sigma").alias("sigma"))
             .join(
-                bx(visited.select("s", F.col("v").alias("nv"))),
+                ss.bx(_union(levels).select("s", F.col("v").alias("nv"))),
                 ["s", "nv"],
                 "left_anti",
             )
-            .select("s", F.col("nv").alias("v"), F.lit(lvl).alias("dist"), "sigma")
-            .localCheckpoint(eager=True)
+            .select("s", F.col("nv").alias("v"), F.lit(i + 1).alias("dist"), "sigma")
         )
-        levels.append(nxt)
-        visited = levels[0]
-        for x in levels[1:]:
-            visited = visited.unionByName(x)
-    # backward dependency sweep
-    delta = visited.where(F.col("dist") == max_depth).select(
-        "s", "v", F.lit(0.0).alias("delta")
-    )
-    deltas = [delta]
-    for lvl in range(max_depth, 0, -1):
+
+    visited = _union(ss.run([lvl0], forward, iters=max_depth, history=True))
+
+    def backward(deltas, i):
+        lvl = max_depth - i
         w_nodes = (
             visited.where(F.col("dist") == lvl)
-            .join(bx(delta), ["s", "v"], "left")
+            .join(ss.bx(deltas[-1]), ["s", "v"], "left")
             .select(
                 "s",
                 F.col("v").alias("w"),
@@ -1252,9 +1120,9 @@ def betweenness_sampled(
         v_nodes = visited.where(F.col("dist") == lvl - 1).select(
             "s", "v", F.col("sigma").alias("sigma_v")
         )
-        delta = (
-            e.join(bx(v_nodes), v_nodes.v == e.src)
-            .join(bx(w_nodes.withColumnRenamed("w", "dst")), ["s", "dst"])
+        return (
+            e.join(ss.bx(v_nodes), v_nodes.v == e.src)
+            .join(ss.bx(w_nodes.withColumnRenamed("w", "dst")), ["s", "dst"])
             .groupBy("s", "v")
             .agg(
                 F.round(
@@ -1264,38 +1132,34 @@ def betweenness_sampled(
                     6,
                 ).alias("delta")
             )
-            .localCheckpoint(eager=True)
         )
-        deltas.append(delta)
-    all_delta = deltas[0]
-    for d in deltas[1:]:
-        all_delta = all_delta.unionByName(d)
-    out = (
+
+    delta0 = visited.where(F.col("dist") == max_depth).select(
+        "s", "v", F.lit(0.0).alias("delta")
+    )
+    all_delta = _union(ss.run([delta0], backward, iters=max_depth, history=True))
+    return (
         visited.where(F.col("dist") > 0)
-        .join(bx(all_delta), ["s", "v"], "left")
+        .join(ss.bx(all_delta), ["s", "v"], "left")
         .groupBy(F.col("v").alias("id"))
         .agg(F.round(F.sum(F.coalesce("delta", F.lit(0.0))), 6).alias("bc"))
     )
-    return out
 
 
-def eigenvector_centrality(
-    edges: DataFrame, iterations: int = 6, checkpoint_each: bool = True
-) -> DataFrame:
+def eigenvector_centrality(edges: DataFrame, iterations: int = 6) -> DataFrame:
     """Eigenvector centrality (power iteration, GDS
     ``gds.eigenvector``) on a SYMMETRIC edge list → (id, score):
     x_{t+1} = normalize_L2(A · x_t), x_0 = 1.
 
     The undirected member of the spectral family next to HITS (q141 —
     which is exactly this recurrence run on a directed graph with two
-    alternating vectors).  Loop discipline identical to :func:`hits`:
-    pinned distinct edge list, broadcast-under-cap state vector, `_nw`
-    plan-local widths — and the r13 UNNORMALIZED loop: power iteration
-    is linear, so the per-step L2 normalizer is a scalar that cancels
-    exactly (x_t = Aᵗ·1 / ‖Aᵗ·1‖ either way); one final normalization
-    replaces one 1-row normalizer broadcast + crossJoin per step (see
-    hits() for the overflow headroom and last-ulps drift argument —
-    verified output-identical at sf0.001/0.01/0.1 against the unchanged
+    alternating vectors), run the same way: pinned distinct edge list
+    and the r13 UNNORMALIZED loop — power iteration is linear, so the
+    per-step L2 normalizer is a scalar that cancels exactly
+    (x_t = Aᵗ·1 / ‖Aᵗ·1‖ either way); one final normalization replaces
+    one 1-row normalizer broadcast + crossJoin per step (see hits() for
+    the overflow headroom and last-ulps drift argument — verified
+    output-identical at sf0.001/0.01/0.1 against the unchanged
     per-step-normalized oracle).
     """
     if iterations < 1:
@@ -1307,22 +1171,21 @@ def eigenvector_centrality(
     )
     m = _derived(edges, ("eig-ecount",), lambda: e.count())
     n = _derived(edges, ("eig-n",), lambda: e.select("src").distinct().count())
-    w = _width(m)
-    bc = (lambda d: F.broadcast(d)) if n <= _BCAST_MAX_ROWS else (lambda d: d)
-    x = e.select("src").distinct().withColumn("score", F.lit(1.0))
-    if checkpoint_each:
-        x = _compact(x, n).localCheckpoint(eager=True)
-    # hinted-broadcast join + agg only: the AQE-off loop class
-    with _aqe_off(e.sparkSession, n <= _BCAST_MAX_ROWS):
-      for i in range(iterations):
-        x = _nw(
-            e.join(bc(x.select(F.col("src"), F.col("score"))), "src")
-            .groupBy("dst")
-            .agg(F.sum("score").alias("score")),
-            w,
-        ).withColumnRenamed("dst", "src")
-        if checkpoint_each:
-            x = _compact(x, n).localCheckpoint(eager=True)
+    ss = _Supersteps(e.sparkSession, n, m)
+    x = (
+        e.select("src").distinct().withColumn("score", F.lit(1.0))
+        .coalesce(_width(n))
+        .localCheckpoint(eager=True)
+    )
+    x = ss.run(
+        x,
+        lambda x, _: e.join(ss.bx(x), "src")
+        .groupBy("dst")
+        .agg(F.sum("score").alias("score"))
+        .withColumnRenamed("dst", "src"),
+        iters=iterations,
+        aqe_off=True,
+    )
     nrm = x.agg(F.sqrt(F.sum(F.col("score") * F.col("score"))).alias("nrm"))
     return x.crossJoin(F.broadcast(nrm)).select(
         F.col("src").alias("id"), (F.col("score") / F.col("nrm")).alias("score")
@@ -1347,11 +1210,9 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
 
     Scale contract: each round is two semi-joins + one anti-join over
     the SHRINKING undecided edge set; node state, edge state AND the
-    round's winners ride ONE union frame whose per-round pin is LAZY
-    and materialized by the early-exit count — one job per round (two
-    on plan-barrier rounds; the barrier every 2 rounds is the
-    _plan_barrier finding — the undecided tables are referenced
-    multiple times per round)."""
+    round's winners ride ONE union frame, so a round is one job (two on
+    the plan-barrier rounds every 2 rounds — the undecided tables are
+    referenced multiple times per round)."""
     pr = (
         "CAST(conv(substr(md5('mis:' || CAST({n} AS STRING)), 1, 13),"
         " 16, 10) AS BIGINT)"
@@ -1359,11 +1220,9 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
 
     # Node, edge and winner state ride ONE union frame (_k = 0 edges,
     # 1 undecided nodes, 2 this round's winners with b = entry round) so
-    # the whole round materializes in a single job: the merged lazy pin
-    # is forced by the early-exit count (count-materializes-pin, r12) and
-    # the winners/excluded/rm subtrees are branches of that one job —
-    # the former per-round winners pin and the separate limit(1).count()
-    # job are gone (r12 optimization 2: 66 → ~30 jobs; the loop is
+    # the whole round materializes in a single job: the winners/excluded/
+    # rm subtrees are branches of the one pin job that also counts the
+    # undecided nodes (r12 optimization 2: 66 → ~30 jobs; the loop is
     # job-floor bound).  Winner rows are published from each round's
     # PINNED state, so nothing recomputes at output time.
     def _split(st: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1414,27 +1273,17 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
             F.expr(pr.format(n="dst")).alias("pb"),
         ),
     ).localCheckpoint(eager=False)
-    und_nodes, und_edges = _split(state)
-    # one up-front bound decides broadcastability for the whole loop (the
-    # q129/CC policy): every per-round side table (blocked ≤ |E|, winners
-    # ≤ |V|, excluded ≤ 2|E|, rm ≤ |V|+2|E|) only shrinks with the
-    # undecided subgraph.  With the pre-join distincts dropped under the
-    # cap, `rm` can carry up to |V|+2|E| UNDEDUPED rows ≈ 2·n0, so the
-    # effective cap is HALVED (ADVICE r12) to keep every broadcast build
-    # under the same row budget as the other loops.  Under the cap the
-    # pre-join distincts are dropped: their only job is bounding SHUFFLED
-    # bytes, and a broadcast semi/anti hash build dedups keys itself —
-    # row sets are unchanged, the per-round shuffle exchanges (and their
-    # AQE stage jobs) disappear.  Past the cap the distinct+shuffle plan
-    # is exactly the old one.
+    # Every per-round side table (blocked ≤ |E|, winners ≤ |V|, excluded
+    # ≤ 2|E|, rm ≤ |V|+2|E|) only shrinks with the undecided subgraph.
+    # Under the cap the pre-join distincts are dropped — their only job
+    # is bounding SHUFFLED bytes, and a broadcast semi/anti hash build
+    # dedups keys itself — so `rm` can carry up to |V|+2|E| UNDEDUPED
+    # rows ≈ 2·n0, the loop's state-row bound (ADVICE r12).
     n0 = state.count()
-    bcast = n0 <= _BCAST_MAX_ROWS // 2
-    bc = (lambda d: F.broadcast(d)) if bcast else (lambda d: d)
-    n_und = n0  # nodes exist iff state is non-empty (every edge has ends)
-    mis_frames: list[DataFrame] = []
-    for k in range(1, max_rounds + 1):
-        if n_und == 0:
-            break
+    ss = _Supersteps(edges.sparkSession, 2 * n0, n0)
+
+    def step(rounds, i):
+        und_nodes, und_edges = _split(rounds[-1])
         blocked = und_edges.select(
             F.when(
                 F.struct(F.col("pa"), F.col("src"))
@@ -1444,16 +1293,15 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
             .otherwise(F.col("dst"))
             .alias("n")
         )
-        if not bcast:
+        if not ss.bcast:
             blocked = blocked.distinct()
         # winners is NOT pinned: all its consumers (the _k=2 state rows,
         # both excluded semi-joins, the rm anti-joins) are branches of
-        # the ONE merged-state job below; the deterministic md5-priority
+        # the ONE merged-state job; the deterministic md5-priority
         # anti-join over pinned inputs re-evaluates in-job with its
-        # `blocked` exchange reused (ReuseExchange), instead of paying a
-        # dedicated checkpoint job per round (r12 A/B)
-        winners = und_nodes.join(bc(blocked), "n", "left_anti").select("n")
-        bw = bc(winners)
+        # `blocked` exchange reused (ReuseExchange) (r12 A/B)
+        winners = und_nodes.join(ss.bx(blocked), "n", "left_anti").select("n")
+        bw = ss.bx(winners)
         excluded = (
             und_edges.join(bw, und_edges.src == bw.n, "leftsemi")
             .select(F.col("dst").alias("n"))
@@ -1463,46 +1311,44 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
                 )
             )
         )
-        if not bcast:
+        if not ss.bcast:
             excluded = excluded.distinct()
         rm = winners.select("n").unionAll(excluded)
-        if not bcast:
+        if not ss.bcast:
             rm = rm.distinct()
-        brm = bc(rm)
+        brm = ss.bx(rm)
         nxt_nodes = und_nodes.join(brm, "n", "left_anti")
         nxt_edges = und_edges.join(
             brm, und_edges.src == brm.n, "left_anti"
         ).join(brm, und_edges.dst == brm.n, "left_anti")
-        merged = _merge(
-            nxt_nodes, nxt_edges, winners.select("n", F.lit(k).alias("round"))
+        return _merge(
+            nxt_nodes, nxt_edges, winners.select("n", F.lit(i + 1).alias("round"))
         )
-        if k % 2 == 0:
-            state = _plan_barrier(merged)
-        else:
-            state = merged.localCheckpoint(eager=False)
-        und_nodes, und_edges = _split(state)
-        n_und = und_nodes.count()  # one job: materializes the round's pin
-        mis_frames.append(
-            state.where(F.col("_k") == 2).select(
-                F.col("a").alias("n"), F.col("b").cast("int").alias("round")
-            )
-        )
-    # ADVICE r12: decide completion by the FINAL undecided count, not
-    # for/else — a graph whose last allowed round decides every node is
-    # complete, not an error.
-    if n_und != 0:
+
+    # nodes exist iff state is non-empty (every edge has ends)
+    rounds = ss.run(
+        [state],
+        step,
+        iters=max_rounds if n0 else 0,
+        history=True,
+        barrier_every=2,
+        measure=F.count_if(F.col("_k") == 1),
+        until=lambda _, n: n == 0,
+    )
+    # ADVICE r12: decide completion by the FINAL undecided count — a
+    # graph whose last allowed round decides every node is complete
+    if ss.last:
         raise RuntimeError(
             f"luby_mis: undecided nodes remain after {max_rounds} rounds"
         )
-    if not mis_frames:
-        # empty edge input: no nodes, empty MIS (ADVICE r12 — was an
-        # IndexError); reuse the state frame's lineage for the schema
-        return (
-            state.select(
-                F.col("a").alias("id"), F.col("b").cast("int").alias("round")
-            ).limit(0)
+    wins = [
+        r.where(F.col("_k") == 2).select(
+            F.col("a").alias("id"), F.col("b").cast("int").alias("round")
         )
-    out = mis_frames[0]
-    for f in mis_frames[1:]:
-        out = out.unionAll(f)
-    return out.withColumnRenamed("n", "id")
+        for r in rounds[1:]
+    ]
+    # empty edge input: no nodes, empty MIS (ADVICE r12 — was an
+    # IndexError); reuse the state frame's lineage for the schema
+    return _union(wins) if wins else rounds[0].select(
+        F.col("a").alias("id"), F.col("b").cast("int").alias("round")
+    ).limit(0)

@@ -66,10 +66,9 @@ def co_supply_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fewer, larger expansion tasks make the partial aggregation over the
     # pair keys far more effective (each task covers more of the key
     # space before the shuffle).  The coalesce is lazy — same single job
-    # — and sized off the fact-table row count (a metadata-cheap count),
-    # so at real scale the target exceeds the current partitions and
-    # nothing changes.
-    from .algorithms import _compact
+    # — and sized off the fact-table row count (a metadata-cheap count)
+    # at ~5 M lineitem rows per task, so at real scale the target exceeds
+    # the current partitions and nothing changes.
 
     # Materialize the per-part supplier sets BEFORE expansion: the
     # expansion plan references `sup` from multiple generator branches,
@@ -78,7 +77,7 @@ def co_supply_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiny (one row per part) and also makes the max-degree statistic a
     # near-free scan.
     sup = (
-        _compact(sup, li.count(), rows_per_part=5_000_000)
+        sup.coalesce(max(8, li.count() // 5_000_000))
         .localCheckpoint(eager=True)
     )
     max_deg = sup.agg(F.max(F.size("ss"))).collect()[0][0] or 0

@@ -949,8 +949,8 @@ def _kmeans_core(vecs: DataFrame, n_cells: int, iters: int) -> DataFrame:
         # both aggregates have intrinsically bounded outputs
         # (≤ n_cells·dim, then ≤ n_cells rows) — map-side partial sums do
         # the heavy lifting, so collapsing the reduce side to a handful
-        # of tasks is always right, at any corpus size (the `_nw`
-        # loop-stage rule from the graph family).
+        # of tasks is always right, at any corpus size (the superstep
+        # driver's width rule from the graph family).
         sums = (
             nearest_centroid_assign(vecs, cents, extra_cols=("vm",))
             .select("cell", F.posexplode("vm").alias("pos", "mval"))

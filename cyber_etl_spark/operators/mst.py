@@ -30,12 +30,12 @@ from .quantiles import _local_values_df
 
 def _pin(df: DataFrame, w: int = 8, eager: bool = True) -> DataFrame:
     """Checkpoint a loop-state table, first collapsing its stage-terminal
-    shuffle to ``w`` reduce tasks (the graph/algorithms._nw rule: pin
-    jobs bypass AQE, so a 1000-row pointer table would otherwise run 32
-    near-empty reduce tasks per superstep; when the exchange already has
-    fewer partitions than ``w`` the coalesce is a no-op, so
-    cluster-scale width is untouched).  Measured a wash at sf0.1 (the
-    loop is job-floor-bound, ~7 jobs/round), kept for the reduce-task
+    shuffle to ``w`` reduce tasks (the superstep driver's width rule in
+    graph/algorithms: pin jobs bypass AQE, so a 1000-row pointer table
+    would otherwise run 32 near-empty reduce tasks per superstep; when
+    the exchange already has fewer partitions than ``w`` the coalesce is
+    a no-op, so cluster-scale width is untouched).  Measured a wash at
+    sf0.1 (the loop is job-floor-bound, ~7 jobs/round), kept for the reduce-task
     floor it removes on wider sessions.  ``eager=False`` when the caller
     immediately counts the result — the count is then the action that
     materializes the pin, one job instead of two (the bfs_distances r12

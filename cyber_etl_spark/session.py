@@ -34,6 +34,10 @@ def _local_cores() -> int:
         return os.cpu_count() or 8
 
 
+# read TIMESTAMP(NANOS) parquet columns as longs (sources.read_table)
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def get_spark(app_name: str = "cyber-etl-spark", **extra_conf: str) -> SparkSession:
     """Build (or fetch) the singleton SparkSession.
 
@@ -51,6 +55,7 @@ def get_spark(app_name: str = "cyber-etl-spark", **extra_conf: str) -> SparkSess
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config(NANOS_AS_LONG, "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -63,6 +68,14 @@ def get_spark(app_name: str = "cyber-etl-spark", **extra_conf: str) -> SparkSess
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def nanos_as_long(spark: SparkSession) -> None:
+    """Turn :data:`NANOS_AS_LONG` on for a session not built by
+    :func:`get_spark` (the driver passes its own); once it is on this
+    writes nothing, so concurrent queries never race on the setting."""
+    if spark.conf.get(NANOS_AS_LONG, "false") != "true":
+        spark.conf.set(NANOS_AS_LONG, "true")
 
 
 def session_token(spark: SparkSession) -> str:

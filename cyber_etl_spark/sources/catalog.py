@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import nanos_as_long
+
 TABLES = (
     "region",
     "nation",
@@ -49,7 +51,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     flat = os.path.join(sf_dir, f"{name}.parquet")
     nested = os.path.join(sf_dir, name)
     path = flat if os.path.exists(flat) else nested
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos_as_long(spark)
     df = spark.read.parquet(path)
     for f in df.schema.fields:
         if f.name == "ts" and f.dataType.simpleString() == "bigint":

@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import nanos_as_long
+
 # ts physical type varies by driver data generation (TIMESTAMP(NANOS) →
 # read as long + convert; naive TIMESTAMP(MICROS) → TIMESTAMP_NTZ → cast),
 # same convention as sources.catalog.read_table.  Streaming sources cannot
@@ -56,7 +58,7 @@ def read_event_stream(
     TIMESTAMP(MICROS) read as NTZ) — callers on a MICROS-generating
     driver must pass the latter or the first arriving file would kill
     the query with a schema-convert error."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos_as_long(spark)
     try:
         batch_ts = dict(spark.read.parquet(path).dtypes).get("ts", "bigint")
     except Exception:

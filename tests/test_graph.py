@@ -1,7 +1,9 @@
-"""Louvain-level behavior: determinism and modularity improvement."""
+"""Graph algorithms: loop semantics, both physical paths of every
+superstep loop, and the AQE scope."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -59,52 +61,202 @@ def test_session_caches_key_on_application_id(spark, sf_smoke):
     assert any(k[0] == token for k in textops._SH_CACHE)
 
 
-def test_rank_loop_without_forced_broadcast(spark, monkeypatch):
-    """Above _BCAST_MAX_ROWS the loops must not force-broadcast the state
-    vector: pin the cutoff to 0 and check the shuffle-join path produces
-    the identical result (AQE may still choose broadcast dynamically —
-    what matters is we never FORCE hundreds of MB per superstep)."""
+def _loop_edges(spark):
+    """The two bridged 4-cliques plus a separate path 20-21-22-23: two
+    components, a multi-hop frontier, and vertices outside every core."""
+    rows = [(a, b) for a in range(4) for b in range(4) if a < b]
+    rows += [(a + 10, b + 10) for a, b in rows] + [(3, 10)]
+    rows += [(20, 21), (21, 22), (22, 23)]
+    return spark.createDataFrame(rows, "src long, dst long")
+
+
+def _mirrored(spark):
+    e = _loop_edges(spark)
+    return e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
+def _rows(df, digits=9):
+    return sorted(
+        tuple(round(v, digits) if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+# every public superstep loop → a run on fresh input frames, as sorted rows
+_LOOPS = {
+    "connected_components": lambda a, s: _rows(a.connected_components(_loop_edges(s))),
+    "pagerank": lambda a, s: _rows(a.pagerank(_loop_edges(s), iterations=6)),
+    "label_propagation": lambda a, s: _rows(a.label_propagation(_loop_edges(s), 2)),
+    "louvain_level": lambda a, s: _rows(a.louvain_level(_loop_edges(s), rounds=3)),
+    "louvain": lambda a, s: _rows(a.louvain(_loop_edges(s), levels=2, rounds=3)),
+    "bfs_distances": lambda a, s: _rows(
+        a.bfs_distances(
+            _loop_edges(s), s.createDataFrame([(0,), (20,)], "id long"), max_hops=4
+        )
+    ),
+    "kcore": lambda a, s: _rows(a.kcore(_loop_edges(s), k=3, rounds=4)),
+    "ktruss": lambda a, s: _rows(a.ktruss(_loop_edges(s), k=3, rounds=3)),
+    "multi_bfs_distances": lambda a, s: _rows(
+        a.multi_bfs_distances(
+            _loop_edges(s),
+            s.createDataFrame([(0, 0), (1, 20)], "pivot long, id long"),
+            max_hops=4,
+        )
+    ),
+    "sssp_hop_limited": lambda a, s: _rows(
+        a.sssp_hop_limited(
+            _mirrored(s).withColumn("weight", (F.col("src") + F.col("dst")) % 3 + 1),
+            0,
+            iterations=4,
+        )
+    ),
+    "hits": lambda a, s: [_rows(x) for x in a.hits(_loop_edges(s), iterations=3)],
+    "betweenness_sampled": lambda a, s: _rows(
+        a.betweenness_sampled(_mirrored(s), [0, 10, 20], max_depth=3)
+    ),
+    "eigenvector_centrality": lambda a, s: _rows(
+        a.eigenvector_centrality(_mirrored(s), iterations=4)
+    ),
+    "luby_mis": lambda a, s: _rows(a.luby_mis(_loop_edges(s))),
+}
+
+
+@pytest.fixture
+def loop_paths(monkeypatch):
+    """The path each superstep driver takes, in order (True = broadcast)."""
     from cyber_etl_spark.graph import algorithms
 
-    edges = _toy_edges(spark)
-    with_bcast = sorted(
-        (r.id, round(r.rank, 9))
-        for r in algorithms.pagerank(edges, iterations=3).collect()
-    )
-    lpa_bcast = sorted(map(tuple, algorithms.label_propagation(edges, 2).collect()))
-    # fresh edge frame: _derived memoizes per-DataFrame, and the cutoff
-    # is read at call time
-    edges2 = _toy_edges(spark)
-    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
-    without = sorted(
-        (r.id, round(r.rank, 9))
-        for r in algorithms.pagerank(edges2, iterations=3).collect()
-    )
-    lpa_plain = sorted(map(tuple, algorithms.label_propagation(edges2, 2).collect()))
-    assert with_bcast == without
-    assert lpa_bcast == lpa_plain
-    assert algorithms._BCAST_MAX_ROWS == 0  # monkeypatch active for the run
+    paths = []
+    init = algorithms._Supersteps.__init__
+
+    def spy(self, *a, **k):
+        init(self, *a, **k)
+        paths.append(self.bcast)
+
+    monkeypatch.setattr(algorithms._Supersteps, "__init__", spy)
+    return paths
 
 
-def test_bfs_frontier_broadcast_capped(spark, monkeypatch):
-    """bfs_distances must apply the _BCAST_MAX_ROWS guard per hop: on a
-    dense graph a hop-2 frontier can be a large fraction of |V|, and an
-    unconditional F.broadcast re-ships a multi-GB table every hop
-    (VERDICT r03 'What's wrong' #2).  Force the fallback (cap 0) and the
-    shuffle-join path must produce identical distances."""
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+def test_loop_past_cap_matches_broadcast(spark, monkeypatch, loop_paths, loop):
+    """Both physical paths of every superstep loop give the same rows:
+    under the default cap the driver broadcasts the loop state; with
+    ``_BCAST_MAX_ROWS`` pinned to 0 it takes the shuffle path the loops
+    run past 1 M state rows.  Fresh edge frames each run, because the
+    derived tables are memoized per frame."""
     from cyber_etl_spark.graph import algorithms
 
-    edges = _toy_edges(spark)
-    sources = edges.select(F.col("src").alias("id")).where(F.col("id") == 0).distinct()
-    with_bcast = sorted(
-        map(tuple, algorithms.bfs_distances(edges, sources, max_hops=4).collect())
-    )
+    default = _LOOPS[loop](algorithms, spark)
+    assert loop_paths and all(loop_paths)
+    loop_paths.clear()
     monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
-    without = sorted(
-        map(tuple, algorithms.bfs_distances(_toy_edges(spark), sources, max_hops=4).collect())
-    )
-    assert with_bcast == without
-    assert with_bcast  # non-trivial: the toy graph reaches vertices
+    past_cap = _LOOPS[loop](algorithms, spark)
+    assert loop_paths and not any(loop_paths)
+    assert past_cap == default
+    assert default  # non-trivial on the toy graph
+
+
+# registered queries whose builders run a superstep loop
+_LOOP_QUERIES = (
+    "q27_dedup_clusters",
+    "q28_pagerank",
+    "q29_articlerank",
+    "q30_communities",
+    "q43_modularity",
+    "q48_weighted_pagerank",
+    "q51_louvain_communities",
+    "q70_bfs_hops",
+    "q100_community_revenue",
+    "q101_louvain_hierarchy",
+    "q128_kcore",
+    "q129_sssp",
+    "q135_personalized_pagerank",
+    "q141_hits",
+    "q157_ktruss",
+    "q162_betweenness_sampled",
+    "q194_dbscan_clusters",
+    "q196_eigenvector_centrality",
+    "q214_cluster_aware_split",
+    "q250_harmonic_centrality",
+    "q255_graph_diameter",
+    "q320_dedup_keep_best",
+    "q348_dedup_threshold_sweep",
+    "q358_bipartite_check",
+    "q412_luby_mis",
+)
+
+
+def test_loop_queries_match_oracle_past_cap(spark, sf_smoke, monkeypatch, loop_paths):
+    """Every loop query matches its DuckDB oracle on the shuffle path.
+    The memos that hold loop outputs are cleared first: a memo hit would
+    skip the loop under test."""
+    from cyber_etl_spark.graph import algorithms
+    from cyber_etl_spark.plans import QUERIES, graphops
+    from cyber_etl_spark.testing import compare_query
+
+    graphops._LPA_CACHE.clear()
+    graphops._LOUVAIN1_CACHE.clear()
+    for key in [k for k in graphops._BACKBONE_CACHE if k[-1] == "msf"]:
+        del graphops._BACKBONE_CACHE[key]
+    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
+    failures = []
+    for name in _LOOP_QUERIES:
+        res = compare_query(spark, sf_smoke, name)
+        if not res.ok:
+            failures.append(f"{name}: {res.detail}")
+    assert set(_LOOP_QUERIES) <= set(QUERIES)
+    assert not failures, "\n".join(failures)
+    assert loop_paths and not any(loop_paths)
+
+
+def test_aqe_scope_nests(spark):
+    """Only the outermost scope turns AQE off; only its exit restores."""
+    from cyber_etl_spark.graph.algorithms import _aqe_off
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    with _aqe_off(spark):
+        with _aqe_off(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "false"
+        with _aqe_off(spark, enabled=False):
+            assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == before
+
+
+def test_aqe_scope_overlapping_threads(spark):
+    """Thread A enters, thread B enters, A exits while B is still inside,
+    then B exits: AQE stays off until B's exit and then returns to the
+    session value (a save/restore per scope would restore 'false')."""
+    import threading
+
+    from cyber_etl_spark.graph.algorithms import _aqe_off
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen = {}
+
+    def a():
+        with _aqe_off(spark):
+            a_in.set()
+            b_in.wait(30)
+        a_out.set()
+
+    def b():
+        a_in.wait(30)
+        with _aqe_off(spark):
+            b_in.set()
+            a_out.wait(30)
+            seen["after_a_exit"] = spark.conf.get(key)
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert seen == {"after_a_exit": "false"}
+    assert spark.conf.get(key) == before
 
 
 def test_louvain_improves_on_lpa_cosupply(spark, sf_smoke):

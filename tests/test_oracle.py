@@ -25,8 +25,13 @@ from cyber_etl_spark.testing import compare_query
 _WORKERS = 6
 
 
+def _sql_conf(spark) -> dict:
+    return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.")}
+
+
 def test_all_queries_match_oracle(spark, sf_smoke):
     names = sorted(QUERIES)
+    conf_before = _sql_conf(spark)
 
     def run(name):
         try:
@@ -37,6 +42,9 @@ def test_all_queries_match_oracle(spark, sf_smoke):
 
     with ThreadPoolExecutor(max_workers=_WORKERS) as ex:
         results = list(ex.map(run, names))
+    # no query may leave session state behind for the next one (e.g. a
+    # loop's AQE-off scope racing another thread's)
+    assert _sql_conf(spark) == conf_before
     failures = [f"{n}: {d}" for n, ok, d in results if not ok]
     assert not failures, (
         f"{len(failures)}/{len(names)} queries diverged from their oracle:\n"
