@@ -130,8 +130,10 @@ def main() -> None:
         # {sec, jobs} values) so the driver's `queries` seconds contract
         # is untouched.
         "jobs": jobs,
-        # Shared-artifact build costs (r12 verdict item #2): each
-        # SessionMemo build is timed once at its first (and only)
+        # Shared-artifact build costs (r12 verdict item #2): exclusive
+        # seconds of each memoized build (time spent inside builds it
+        # calls is charged to those), one entry per
+        # `sf:function:params` label, timed at its first (and only)
         # construction — the cold-pass cost the min-of-2 warm `queries`
         # numbers amortize away.  A full cold run costs
         # sum(queries) + sum(builds).

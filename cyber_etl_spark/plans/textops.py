@@ -22,7 +22,7 @@ from ..operators.dedup import (
     minhash_lsh_pairs_incremental,
     simhash_neardup_pairs,
 )
-from ..session import SessionMemo, session_token
+from ..session import session_memo
 from ..sources import read_table
 from .registry import query
 
@@ -30,18 +30,14 @@ _STOPS_SQL = "[" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + "]"
 
 # one materialized shingle table per (session, dataset): shared by the
 # Jaccard, MinHash-LSH and clustering queries
-_SH_CACHE: dict[tuple, object] = SessionMemo()
-
-
+@session_memo
 def cached_shingles(spark: SparkSession, sf_dir: str):
     from ..operators.dedup import shingle_sets
 
-    key = (session_token(spark), sf_dir)
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = shingle_sets(read_table(spark, sf_dir, "documents"))
-    return _SH_CACHE[key]
+    return shingle_sets(read_table(spark, sf_dir, "documents"))
 
 
+@session_memo
 def cached_kmeans(
     spark: SparkSession, sf_dir: str, n_cells: int, iters: int
 ):
@@ -53,16 +49,12 @@ def cached_kmeans(
     q375 catalog-routing rule applied to clustering artifacts)."""
     from ..operators.ann import _kmeans_core, _quantized_vecs
 
-    key = (session_token(spark), sf_dir, "kmeans", n_cells, iters)
-    if key not in _SH_CACHE:
-        emb = read_table(spark, sf_dir, "embeddings")
-        vecs = _quantized_vecs(emb, "vec_id", "embedding").localCheckpoint(
-            eager=True
-        )
-        _SH_CACHE[key] = (vecs, _kmeans_core(vecs, n_cells, iters))
-    return _SH_CACHE[key]
+    emb = read_table(spark, sf_dir, "embeddings")
+    vecs = _quantized_vecs(emb, "vec_id", "embedding").localCheckpoint(eager=True)
+    return vecs, _kmeans_core(vecs, n_cells, iters)
 
 
+@session_memo
 def cached_ivf_index(
     spark: SparkSession, sf_dir: str, n_cells: int = 16, iters: int = 2
 ):
@@ -72,16 +64,11 @@ def cached_ivf_index(
     ``ivf_assign(emb, n_cells)`` (same kmeans_fit path)."""
     from ..operators.ann import nearest_centroid_assign
 
-    key = (session_token(spark), sf_dir, "ivfidx", n_cells, iters)
-    if key not in _SH_CACHE:
-        vecs, cents = cached_kmeans(spark, sf_dir, n_cells, iters)
-        assign = nearest_centroid_assign(vecs, cents).localCheckpoint(
-            eager=True
-        )
-        _SH_CACHE[key] = (cents, assign)
-    return _SH_CACHE[key]
+    vecs, cents = cached_kmeans(spark, sf_dir, n_cells, iters)
+    return cents, nearest_centroid_assign(vecs, cents).localCheckpoint(eager=True)
 
 
+@session_memo
 def cached_lsh_pairs(spark: SparkSession, sf_dir: str):
     """MinHash-LSH verified pair table (q22's scheme, threshold 0.5),
     materialized once per (session, dataset).  Because a document's
@@ -89,32 +76,27 @@ def cached_lsh_pairs(spark: SparkSession, sf_dir: str):
     independent of which OTHER documents exist, the LSH pairs of any
     document SUBSET are exactly this table restricted to ids in the
     subset; q109 exploits that instead of re-running the banding."""
-    key = (session_token(spark), sf_dir, "lsh05")
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = minhash_lsh_pairs(
-            read_table(spark, sf_dir, "documents"),
-            threshold=0.5,
-            num_perm=8,
-            bands=4,
-            shingles_df=cached_shingles(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-    return _SH_CACHE[key]
+    return minhash_lsh_pairs(
+        read_table(spark, sf_dir, "documents"),
+        threshold=0.5,
+        num_perm=8,
+        bands=4,
+        shingles_df=cached_shingles(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
+@session_memo
 def cached_jaccard_pairs(spark: SparkSession, sf_dir: str):
     """Exact Jaccard ≥ 0.5 pair table, materialized once per (session,
     dataset) — q21 reports it, q27 clusters it, q49/q50 anti-join it.
     The pair table is the natural shared intermediate of a dedup pass
     (production pipelines persist it); the pinned copy is tiny (only
     pairs above threshold survive)."""
-    key = (session_token(spark), sf_dir, "pairs05")
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = jaccard_pairs(
-            read_table(spark, sf_dir, "documents"),
-            threshold=0.5,
-            shingles_df=cached_shingles(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-    return _SH_CACHE[key]
+    return jaccard_pairs(
+        read_table(spark, sf_dir, "documents"),
+        threshold=0.5,
+        shingles_df=cached_shingles(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 def _md5_fraction(col: str):
     """Uniform [0,1) fraction from the md5 of a stable id — the single
@@ -1767,9 +1749,8 @@ from ..operators.bpe import (  # noqa: E402
     merges_from_bests,
 )
 
-_BPE_CACHE: dict[tuple, tuple] = SessionMemo()
 
-
+@session_memo
 def _bpe_rounds(spark: SparkSession, sf_dir: str, num_merges: int = 4) -> tuple:
     """One cached BPE merge-rounds run per (session, dataset): the learn
     (q131), curve (q136) and tokenize (q145) queries all consume the
@@ -1777,12 +1758,9 @@ def _bpe_rounds(spark: SparkSession, sf_dir: str, num_merges: int = 4) -> tuple:
     artifact, not a per-query recomputation."""
     from ..operators.bpe import _merge_rounds, _word_table
 
-    key = (session_token(spark), sf_dir, num_merges)
-    if key not in _BPE_CACHE:
-        docs = read_table(spark, sf_dir, "documents")
-        words = _word_table(docs, "text", keep_token=True).localCheckpoint(eager=True)
-        _BPE_CACHE[key] = _merge_rounds(words, num_merges, keep_last_words=True)
-    return _BPE_CACHE[key]
+    docs = read_table(spark, sf_dir, "documents")
+    words = _word_table(docs, "text", keep_token=True).localCheckpoint(eager=True)
+    return _merge_rounds(words, num_merges, keep_last_words=True)
 
 
 @query(
@@ -1962,36 +1940,29 @@ def q136_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curve_from_tables(_bpe_rounds(spark, sf_dir, 4)[1])
 
 
-
-
-_POS_CACHE: dict[tuple, tuple] = SessionMemo()
-
-
+@session_memo
 def _positional_shingles(spark: SparkSession, sf_dir: str, n: int = 8):
     """Shared artifact of the span family (q139/q152 detect / q140 cut):
     the positional n-gram table (doc_id, n_tokens, pos, shingle) and its
     per-shingle (owner, df) aggregate, each checkpointed once per
     (session, dataset, n) — the same persisted-projection policy as the
-    _SH_CACHE shingle sets.  ``n`` is the span granularity knob (r5
+    :func:`cached_shingles` sets.  ``n`` is the span granularity knob (r5
     verdict item 7): smaller n = finer, more aggressive span detection."""
     from ..functions.text import shingles as _sh
 
-    key = (session_token(spark), sf_dir, "pos", n)
-    if key not in _POS_CACHE:
-        docs = read_table(spark, sf_dir, "documents")
-        toks = F.filter(F.split("text", " "), lambda x: x != "")
-        pos = docs.select(
-            "doc_id",
-            F.size(toks).cast("long").alias("n_tokens"),
-            F.posexplode(_sh(toks, n)).alias("p0", "shingle"),
-        ).select(
-            "doc_id", "n_tokens", (F.col("p0") + 1).cast("long").alias("pos"), "shingle"
-        ).localCheckpoint(eager=True)
-        own = pos.groupBy("shingle").agg(
-            F.min("doc_id").alias("owner"), F.countDistinct("doc_id").alias("df")
-        ).localCheckpoint(eager=True)
-        _POS_CACHE[key] = (pos, own)
-    return _POS_CACHE[key]
+    docs = read_table(spark, sf_dir, "documents")
+    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    pos = docs.select(
+        "doc_id",
+        F.size(toks).cast("long").alias("n_tokens"),
+        F.posexplode(_sh(toks, n)).alias("p0", "shingle"),
+    ).select(
+        "doc_id", "n_tokens", (F.col("p0") + 1).cast("long").alias("pos"), "shingle"
+    ).localCheckpoint(eager=True)
+    own = pos.groupBy("shingle").agg(
+        F.min("doc_id").alias("owner"), F.countDistinct("doc_id").alias("df")
+    ).localCheckpoint(eager=True)
+    return pos, own
 
 
 def repeated_spans(

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,10 +42,9 @@ def bucketed_join(
 
 # ---- ensure-build lifecycle for the q400 bucketed fact pair -------------
 
-from ..session import SessionMemo  # noqa: E402
+from ..session import SessionMemo, session_token  # noqa: E402
 
 _PAIR_MEMO: dict[tuple, tuple] = SessionMemo()
-_PAIR_LOCK = threading.Lock()
 
 
 def _dataset_digest(sf_dir: str, tables: tuple[str, ...]) -> str:
@@ -75,10 +73,10 @@ def ensure_bucketed_fact_pair(
 
     Lifecycle mirrors ``operators/statcat.ensure_catalog``: table names
     embed a (path, size, mtime) dataset digest so a regenerated dataset
-    mints fresh tables; a module lock + per-(session, digest) memo makes
-    the threaded verification sweep race-safe (saveAsTable overwrite is
-    NOT atomic, so the build itself must be serialized — the q380/q381
-    race class).  Returns the two table names.
+    mints fresh tables; the per-(session, digest) memo's per-key build
+    lock makes the threaded verification sweep race-safe (saveAsTable
+    overwrite is NOT atomic, so the build itself must be serialized —
+    the q380/q381 race class).  Returns the two table names.
 
     Scale: this is the write-once/join-many discipline — at 100 TB the
     bucketed write costs one shuffle TOTAL, after which every key-joining
@@ -91,13 +89,8 @@ def ensure_bucketed_fact_pair(
     digest = _dataset_digest(sf_dir, ("lineitem", "orders"))
     li_tbl = f"bkt_li_{digest}_{n_buckets}"
     ord_tbl = f"bkt_ord_{digest}_{n_buckets}"
-    tok = spark.sparkContext.applicationId
-    key = (tok, digest, n_buckets)
-    if _PAIR_MEMO.get(key):
-        return li_tbl, ord_tbl
-    with _PAIR_LOCK:
-        if _PAIR_MEMO.get(key):
-            return li_tbl, ord_tbl
+
+    def build():
         if not (
             spark.catalog.tableExists(li_tbl) and spark.catalog.tableExists(ord_tbl)
         ):
@@ -122,5 +115,7 @@ def ensure_bucketed_fact_pair(
             )
             write_bucketed(li, li_tbl, "ok", n_buckets)
             write_bucketed(orders, ord_tbl, "ok", n_buckets)
-        _PAIR_MEMO[key] = (li_tbl, ord_tbl)
-    return li_tbl, ord_tbl
+        return li_tbl, ord_tbl
+
+    key = (session_token(spark), digest, "bucketed_fact_pair", n_buckets)
+    return _PAIR_MEMO.get_or_build(key, build)

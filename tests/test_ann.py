@@ -441,7 +441,7 @@ def test_no_all_pairs_kernel_feeds_neighbor_graph_consumers():
             code = line.split("#", 1)[0]
             if "cosine_neardup_pairs(" in code and "import" not in code:
                 offenders.append(f"{path.name}:{lineno}")
-    assert offenders == ["textops.py:715"], offenders
+    assert offenders == ["textops.py:697"], offenders
 
 
 def test_eps_neighbor_pairs_subblock_invariance(spark, sf_smoke, monkeypatch):

@@ -53,12 +53,17 @@ def test_session_caches_key_on_application_id(spark, sf_smoke):
     assert token == spark.sparkContext.applicationId
     builder.co_supply_edges(spark, sf_smoke)
     textops.cached_shingles(spark, sf_smoke)
-    for cache in (builder._EDGE_CACHE, textops._SH_CACHE, graphops._BACKBONE_CACHE):
-        for key in cache:
+    memos = (
+        builder.co_supply_edges.memo,
+        textops.cached_shingles.memo,
+        graphops._sparse_upper_edges.memo,
+    )
+    for memo in memos:
+        for key in memo:
             assert isinstance(key[0], str), key  # applicationId, never id(spark)
-        # at least the caches we just populated carry this session's token
-    assert any(k[0] == token for k in builder._EDGE_CACHE)
-    assert any(k[0] == token for k in textops._SH_CACHE)
+    # the memos we just populated carry this session's token
+    assert (token, sf_smoke, "co_supply_edges") in builder.co_supply_edges.memo
+    assert (token, sf_smoke, "cached_shingles") in textops.cached_shingles.memo
 
 
 def _loop_edges(spark):
@@ -192,12 +197,12 @@ def test_loop_queries_match_oracle_past_cap(spark, sf_smoke, monkeypatch, loop_p
     skip the loop under test."""
     from cyber_etl_spark.graph import algorithms
     from cyber_etl_spark.plans import QUERIES, graphops
+    from cyber_etl_spark.session import session_token
     from cyber_etl_spark.testing import compare_query
 
-    graphops._LPA_CACHE.clear()
-    graphops._LOUVAIN1_CACHE.clear()
-    for key in [k for k in graphops._BACKBONE_CACHE if k[-1] == "msf"]:
-        del graphops._BACKBONE_CACHE[key]
+    memoized_loops = (graphops._cached_lpa, graphops._cached_louvain1)
+    for f in (*memoized_loops, graphops._msf_edges):
+        f.memo.clear()
     monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
     failures = []
     for name in _LOOP_QUERIES:
@@ -207,6 +212,10 @@ def test_loop_queries_match_oracle_past_cap(spark, sf_smoke, monkeypatch, loop_p
     assert set(_LOOP_QUERIES) <= set(QUERIES)
     assert not failures, "\n".join(failures)
     assert loop_paths and not any(loop_paths)
+    # the loop memos were rebuilt by this sweep, for this session
+    token = session_token(spark)
+    for f in memoized_loops:
+        assert (token, sf_smoke, f.__name__) in f.memo, f.__name__
 
 
 def test_aqe_scope_nests(spark):

@@ -4,7 +4,9 @@ twin on the same input — the streaming analogue of the DuckDB oracle.
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 
 import pandas as pd
 import pytest
@@ -988,9 +990,14 @@ def test_twap_stream_twin(spark, sf_smoke, tmp_path):
     d = tmp_path / "twap_feed"
     d.mkdir()
     n = len(pdf)
+    base = time.time()
     for i in range(3):
         chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
+        path = d / f"c{i}.parquet"
+        pq.write_table(pa.Table.from_pandas(chunk), str(path))
+        # the file source feeds new files in mtime order; files written
+        # within one clock tick would fall back to directory-listing order
+        os.utime(path, (base + i, base + i))
     stream = (
         spark.readStream.schema(
             "user_id long, event_type string, ts_us long, value double"
